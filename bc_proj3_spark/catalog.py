@@ -12,6 +12,18 @@ rebuild the same table (the silver merge reads its target and replaces
 it): the new contents are fully materialized before the old directory
 is removed, and readers of the old snapshot were already satisfied.
 
+Each table's ``_meta`` entry (``<warehouse>/<layer>/_meta/<name>.json``)
+carries its logical column order, its partition columns and its schema
+(``df.schema.json()`` at overwrite time). Reads hand that schema to the
+parquet reader, so opening a table launches no schema-inference job; a
+``_meta`` written before schemas were recorded still reads through
+inference. Appends and partition-scoped overwrites must match the
+recorded schema (a mismatch raises ``ValueError``), so the stored schema
+can never hide a column the files carry.
+
+:meth:`Catalog.read_rows` reads a small table's rows in the driver with
+pyarrow, without a Spark job; the watermarks use it.
+
 Scale note: on a real deployment this thin path-catalog is the seam
 where Delta/Iceberg slots in (ACID swap, MERGE, time travel,
 DESCRIBE HISTORY); the pipeline code only talks to these verbs, so the
@@ -31,21 +43,47 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LAYERS = ("bronze", "silver", "gold")
+#: copy of the table's ``_meta`` entry kept inside each snapshot
+_VERSION_META = "_catalog_meta.json"
 
 
-def _write_counted(df: DataFrame, path: str, partition_by: list[str] | None) -> int:
+def _write_counted(
+    df: DataFrame, path: str, partition_by: list[str] | None, mode: str = "overwrite"
+) -> int:
     """Write ``df`` as parquet and return the rows written, counted by
     the WRITE JOB itself via ``df.observe`` — never a second read-back
     scan of what was just written (at 100 TB that re-scan is a full
     extra pass over the output)."""
     obs = Observation()
-    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+    writer = df.observe(obs, F.expr("count(1) AS rows")).write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     return int(obs.get["rows"])
+
+
+def quote_ident(col: str) -> str:
+    """``col`` as a backquoted SQL identifier."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _check_schema(table: str, meta: dict, df: DataFrame) -> None:
+    """Raise if ``df``'s columns or types differ from the schema recorded
+    in ``meta`` (nullability and column order are not compared: parquet
+    resolves columns by name and reads every column as nullable)."""
+    if not meta.get("schema"):
+        return
+    want = {f.name: f.dataType.simpleString() for f in StructType.fromJson(meta["schema"])}
+    got = {f.name: f.dataType.simpleString() for f in df.schema}
+    if got != want:
+        diff = sorted(c for c in want.keys() | got.keys() if want.get(c) != got.get(c))
+        raise ValueError(
+            f"{table}: frame schema differs from the recorded one: "
+            + ", ".join(f"{c} (table {want.get(c)}, frame {got.get(c)})" for c in diff)
+        )
 
 
 class Catalog:
@@ -99,10 +137,28 @@ class Catalog:
         """
         if not self.exists(layer, name):
             raise FileNotFoundError(f"table {layer}.{name} does not exist")
-        df = self.spark.read.parquet(str(self.path(layer, name)))
-        cols = self._read_cols(layer, name)
+        return self._load(self.path(layer, name), self._read_meta(layer, name))
+
+    def read_rows(self, layer: str, name: str) -> list[dict]:
+        """A small table's rows as dicts, read in the driver with pyarrow:
+        no Spark job. Meant for one-row control tables (the watermarks),
+        where a distributed scan costs more than the row."""
+        import pyarrow.parquet as pq
+
+        if not self.exists(layer, name):
+            raise FileNotFoundError(f"table {layer}.{name} does not exist")
+        return pq.read_table(str(self.path(layer, name))).to_pylist()
+
+    def _load(self, path: Path, meta: dict | None) -> DataFrame:
+        """Parquet scan of ``path`` with the schema recorded in ``meta``
+        (no inference job), in the recorded column order."""
+        reader = self.spark.read
+        if meta and meta.get("schema"):
+            reader = reader.schema(StructType.fromJson(meta["schema"]))
+        df = reader.parquet(str(path))
+        cols = meta["columns"] if meta else None
         if cols and set(cols) == set(df.columns) and cols != df.columns:
-            df = df.select(*cols)
+            df = df.selectExpr(*map(quote_ident, cols))  # fewer JVM calls than select
         return df
 
     def overwrite(
@@ -122,7 +178,7 @@ class Catalog:
         if target.exists():
             shutil.rmtree(target)
         tmp.rename(target)
-        self._write_meta(layer, name, df.columns, partition_by)
+        self._write_meta(layer, name, df.schema, partition_by)
         return rows
 
     def overwrite_partitions(
@@ -151,6 +207,7 @@ class Catalog:
                 f"{layer}.{name}: partition-scoped overwrite needs exactly one "
                 f"partition column, table has {pby!r}"
             )
+        _check_schema(f"{layer}.{name}", meta, df)
         if any(v is None for v in partition_values):
             raise ValueError(
                 f"{layer}.{name}: null partition value — use full overwrite"
@@ -253,16 +310,18 @@ class Catalog:
         )
         return deleted
 
-    def append(self, layer: str, name: str, df: DataFrame) -> None:
+    def append(self, layer: str, name: str, df: DataFrame) -> int:
         """INSERT INTO, honoring the table's recorded partition layout.
-        The caller is responsible for dedup semantics (anti-join first,
-        as in silver_nyt_archive.py:102-120)."""
+        Returns rows written, observed by the write job. ``df`` must
+        match the recorded schema (``ValueError`` otherwise). The caller
+        is responsible for dedup semantics (anti-join first, as in
+        silver_nyt_archive.py:102-120)."""
         meta = self._read_meta(layer, name) or {}
+        _check_schema(f"{layer}.{name}", meta, df)
         self._snapshot(layer, name)  # pre-append state stays travelable
-        writer = df.write.mode("append")
-        if meta.get("partition_by"):
-            writer = writer.partitionBy(*meta["partition_by"])
-        writer.parquet(str(self.path(layer, name)))
+        return _write_counted(
+            df, str(self.path(layer, name)), meta.get("partition_by"), mode="append"
+        )
 
     # -- time travel (hardlink snapshots) ---------------------------------
 
@@ -297,6 +356,9 @@ class Catalog:
         dst = self._versions_dir(layer, name) / f"v{n}"
         dst.parent.mkdir(parents=True, exist_ok=True)
         shutil.copytree(self.path(layer, name), dst, copy_function=os.link)
+        meta = self._meta_path(layer, name)
+        if meta.exists():  # the snapshot's own schema ('_' files: unseen by Spark)
+            shutil.copyfile(meta, dst / _VERSION_META)
         for old in self.versions(layer, name)[: -self.retain_versions]:
             shutil.rmtree(self._versions_dir(layer, name) / f"v{old}")
         return n
@@ -313,11 +375,12 @@ class Catalog:
             raise FileNotFoundError(
                 f"{layer}.{name}: version {version} not retained (have {vs})"
             )
-        df = self.spark.read.parquet(str(self._versions_dir(layer, name) / f"v{v}"))
-        cols = self._read_cols(layer, name)
-        if cols and set(cols) == set(df.columns) and cols != df.columns:
-            df = df.select(*cols)
-        return df
+        vdir = self._versions_dir(layer, name) / f"v{v}"
+        vmeta = vdir / _VERSION_META
+        if vmeta.exists():
+            return self._load(vdir, json.loads(vmeta.read_text()))
+        meta = self._read_meta(layer, name)  # snapshot taken without a schema
+        return self._load(vdir, meta and {"columns": meta["columns"]})
 
     def compact(
         self,
@@ -447,21 +510,21 @@ class Catalog:
         return self.warehouse / layer / "_meta" / f"{name}.json"
 
     def _write_meta(
-        self, layer: str, name: str, cols: list[str], partition_by: list[str] | None
+        self, layer: str, name: str, schema: StructType, partition_by: list[str] | None
     ) -> None:
         p = self._meta_path(layer, name)
         p.parent.mkdir(parents=True, exist_ok=True)
         p.write_text(
-            json.dumps({"columns": list(cols), "partition_by": partition_by or []})
+            json.dumps({
+                "columns": schema.fieldNames(),
+                "partition_by": partition_by or [],
+                "schema": schema.jsonValue(),
+            })
         )
 
     def _read_meta(self, layer: str, name: str) -> dict | None:
         p = self._meta_path(layer, name)
         return json.loads(p.read_text()) if p.exists() else None
-
-    def _read_cols(self, layer: str, name: str) -> list[str] | None:
-        meta = self._read_meta(layer, name)
-        return meta["columns"] if meta else None
 
     # -- operation history (DESCRIBE HISTORY parity, SURVEY.md §2.1 S15) --
 

@@ -234,11 +234,12 @@ def cdc3_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics (update matched-and-changed, insert unmatched, keep rest)
     are right, merge(v1, v2-upserts) minus the delete keys IS v2.
 
-    Scale shape: merge_upsert's two key joins + one anti join on the
-    delete-key list — all shuffles on the merge key; with both versions
-    bucketed on the key they co-locate. The persisted merge branches are
-    released before returning (the plan recomputes them lazily — at
-    driver scale that is two batch-sized joins, not a table scan).
+    Scale shape: merge_upsert's key join and anti join + one anti join
+    on the delete-key list — all shuffles on the merge key; with both
+    versions bucketed on the key they co-locate. The persisted merge
+    changes are released before returning (the plan recomputes them
+    lazily — at driver scale that is one batch-sized join, not a table
+    scan).
     """
     v1, v2 = _snapshots(table(spark, sf_dir, "orders"))
     changed: Column = F.lit(False)

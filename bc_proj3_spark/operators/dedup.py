@@ -1234,8 +1234,11 @@ def d9_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_near = dropped.count()
     surv.unpersist()
     pairs.unpersist()
-    keep_rate = _dec_to_double(
-        _round_half_up(float(n_surv - n_near) / float(n_docs), 9)
+    # an empty corpus has no keep rate: NULL, as the oracle's x / 0
+    keep_rate = (
+        _dec_to_double(_round_half_up(float(n_surv - n_near) / float(n_docs), 9))
+        if n_docs
+        else None
     )
     row = [(n_docs, n_docs - n_surv, n_near, n_surv - n_near, keep_rate)]
     return local_rows_df(

@@ -8,22 +8,26 @@ The semantic core of the reference's silver layer
 - **merge upsert**: ``MERGE INTO tgt USING src ON tgt.id = src.id WHEN
   MATCHED AND src.version > tgt.version THEN UPDATE SET * WHEN NOT
   MATCHED THEN INSERT *`` (silver_arxiv.py:130-152) re-expressed as a
-  pure-Spark join rewrite (no Delta dependency): one equi-join on the
-  key classifies target rows into kept/updated, one anti-join finds
-  inserts, and the new target is their union.
+  pure-Spark join rewrite (no Delta dependency): one left join of the
+  batch against the target on the key classifies batch rows into
+  updates and inserts, one anti-join keeps the target rows not
+  updated, and the new target is their union.
 - **dedup insert**: append only keys absent from the target — the
   NOT-IN pattern of silver_nyt_archive.py:102-120 as a left_anti join
   (null-safe where NOT IN is not; keys are sha2 so both agree,
   SURVEY.md §7.4.1).
 
-Scale notes: the merge rewrite shuffles both sides on the key once —
-the same physical shape Delta's MERGE lowers to. With ``partition_col``
-it also computes the partition-scoped rewrite plan (touched partitions
-+ their replacement rows), which ``Catalog.overwrite_partitions`` turns
-into Delta-style file pruning: the daily upsert rewrites only the
-run_date partitions the batch touches, not the table.
-Metrics (inserted/updated) are computed from the same join results the
-rewrite already materializes — the engine-side stand-in for
+Scale notes: the merge rewrite joins both sides on the key once (a
+broadcast of the target's key columns while they are small, otherwise a
+shuffle of both sides) — the same physical shape Delta's MERGE lowers
+to. With ``partition_col`` it also computes the partition-scoped
+rewrite plan (touched partitions + their replacement rows), which
+``Catalog.overwrite_partitions`` turns into Delta-style file pruning:
+the daily upsert rewrites only the run_date partitions the batch
+touches, not the table.
+Metrics (inserted/updated) are observed on the same join results the
+rewrite already materializes (dedup insert leaves its count to the
+append's own observation) — the engine-side stand-in for
 DESCRIBE HISTORY's operationMetrics (silver_arxiv.py:175-184, S15).
 """
 
@@ -31,10 +35,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from bc_proj3_spark.catalog import Catalog
+from bc_proj3_spark.catalog import Catalog, quote_ident
 
 EPOCH_WATERMARK = "1970-01-01"
 
@@ -93,8 +97,7 @@ def resolve_watermark(catalog: Catalog, table: str) -> str | None:
     if not has_table and not has_wm:
         return None
     if has_table and has_wm:
-        row = catalog.read("silver", watermark_name(table)).collect()[0]
-        return row["watermark_date"]
+        return catalog.read_rows("silver", watermark_name(table))[0]["watermark_date"]
     raise PreconditionError(
         f"silver.{table}: table and watermark must both exist or neither "
         f"(table={has_table}, watermark={has_wm})"
@@ -104,11 +107,11 @@ def resolve_watermark(catalog: Catalog, table: str) -> str | None:
 def write_watermark(catalog: Catalog, table: str, value: str) -> None:
     """CREATE OR REPLACE the one-row watermark table and verify the
     write-back (silver_arxiv.py:194-209)."""
-    df = catalog.spark.createDataFrame([(str(value),)], ["watermark_date"])
+    # a JVM-side one-row, one-task frame: createDataFrame from Python rows
+    # would ship them through Python workers in one task per core
+    df = catalog.spark.range(0, 1, 1, 1).select(F.lit(str(value)).alias("watermark_date"))
     catalog.overwrite("silver", watermark_name(table), df)
-    stored = catalog.read("silver", watermark_name(table)).collect()[0][
-        "watermark_date"
-    ]
+    stored = catalog.read_rows("silver", watermark_name(table))[0]["watermark_date"]
     if stored != str(value):
         raise ValidationError(f"watermark write-back failed for {table}")
 
@@ -133,11 +136,13 @@ def merge_upsert(
     src must be unique on ``key`` (true in the reference: one batch row
     per article id after the latest-file pick).
 
-    The batch-sized branches (updated, inserts) are persisted and
-    materialized by the metric counts, so the final write reads them
-    from cache instead of re-running the merge joins — metrics and
-    rewrite share one computation. Callers unpersist via
-    ``MergeResult.cleanup()`` once the result is written.
+    One left join of the batch against the target classifies each batch
+    row as update, insert or no change; the batch-sized changed rows are
+    persisted and materialized by one scan-only metrics job (observed
+    aggregates, no shuffle), so the final write reads them from cache
+    instead of re-running the join — metrics and rewrite share one
+    computation. Callers unpersist via ``MergeResult.cleanup()`` once
+    the result is written.
 
     ``partition_col``: when the target table is laid out by this column
     (e.g. run_date), also compute the partition-scoped rewrite plan —
@@ -149,80 +154,85 @@ def merge_upsert(
     updated ∪ inserts — everything ``Catalog.overwrite_partitions``
     needs to rewrite only that data. The kept-rows filter is a
     partition-pruning predicate, so the scoped plan never scans the
-    untouched table. Cost is one extra distinct-collect of a handful of
-    partition values; the merge joins themselves are unchanged.
+    untouched table. The touched values come from the same metrics job.
     """
     from pyspark import StorageLevel
 
     cols = tgt.columns
-    t, s = tgt.alias("tgt"), src.alias("src")
-    joined = t.join(s, F.col(f"tgt.{key}") == F.col(f"src.{key}"), "inner")
-
-    upd_sel = [F.col(f"src.{c}").alias(c) for c in cols]
+    # SQL strings and column names below, not Column objects: each
+    # Column call is several driver-to-JVM round trips
+    q_cols = [quote_ident(c) for c in cols]
+    # one left join classifies every batch row: no target match → insert,
+    # a match passing ``update_when`` → update (carrying the target row's
+    # OLD partition), any other match → no change and dropped. Column
+    # pruning narrows the target side to the key and the columns the
+    # predicate reads.
+    t = tgt.withColumn("__hit", F.lit(True)).alias("tgt")
+    q_key = quote_ident(key)
+    joined = src.alias("src").join(t, F.expr(f"src.{q_key} = tgt.{q_key}"), "left")
+    op = F.when(F.expr("tgt.__hit IS NULL"), F.lit("I")).when(update_when, F.lit("U"))
+    sel = [op.alias("__op"), *[f"src.{c}" for c in cols]]
     if partition_col is not None:
-        # carry the target row's OLD partition alongside the new values
-        upd_sel.append(F.col(f"tgt.{partition_col}").alias("__old_part"))
-    upd = joined.filter(update_when).select(*upd_sel).persist(
-        StorageLevel.MEMORY_AND_DISK
+        sel.append(F.expr(f"tgt.{quote_ident(partition_col)} AS __old_part"))
+    changes = (
+        joined.select(*sel).filter("__op IS NOT NULL").persist(StorageLevel.MEMORY_AND_DISK)
     )
-    updated = upd.select(*[F.col(c) for c in cols])
-    updated_keys = updated.select(F.col(key))
+    updated = changes.filter("__op = 'U'").selectExpr(*q_cols)
+    inserts = changes.filter("__op = 'I'").selectExpr(*q_cols)
+    updated_keys = updated.select(key)
     kept = tgt.join(updated_keys, on=key, how="left_anti")
-    inserts = src.join(tgt.select(key), on=key, how="left_anti").select(
-        *[F.col(c) for c in cols]
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    # ``eager_metrics=False`` (r11, st8's per-batch path): skip the two
-    # metric-count jobs — the branches stay persisted and the CALLER's
-    # single action on ``df`` fills both caches; inserted/updated are
-    # then -1 (unknown). Only for callers that never read the metrics.
-    n_updated = upd.count() if eager_metrics else -1
-    n_inserted = inserts.count() if eager_metrics else -1
     # re-assert tgt's column order: the USING-style anti join above
     # promotes the key column to the front of `kept`
-    out = (
-        kept.unionByName(updated).unionByName(inserts).select(*[F.col(c) for c in cols])
-    )
+    out = kept.unionByName(updated).unionByName(inserts).selectExpr(*q_cols)
 
+    # one scan-only job (a noop sink: no shuffle) fills the cache and
+    # observes the updated count, the inserted count and the touched
+    # partitions (an updated row touches its old and its new partition,
+    # an insert its new one). ``eager_metrics=False`` (st8's per-batch
+    # path) skips it when no partition plan is asked for: the caller's
+    # single action on ``df`` then fills the cache and inserted/updated
+    # stay -1 (unknown).
+    n_updated = n_inserted = -1
     touched: list | None = None
     scoped: DataFrame | None = None
-    if partition_col is not None:
-        parts = (
-            upd.select(F.col("__old_part").alias("p"))
-            .union(upd.select(F.col(partition_col).alias("p")))
-            .union(inserts.select(F.col(partition_col).alias("p")))
-            .distinct()
-            .collect()  # handful of partition values, read from cache
-        )
-        touched = sorted({r["p"] for r in parts}, key=str)
-        if any(v is None for v in touched):
-            touched = scoped = None  # null partition → full rewrite
-        else:
+    if eager_metrics or partition_col is not None:
+        aggs = ["count_if(__op = 'U') AS updated", "count_if(__op = 'I') AS inserted"]
+        if partition_col is not None:
+            p = quote_ident(partition_col)
+            aggs += [
+                f"collect_set({p}) AS `new`",
+                "collect_set(CASE WHEN __op = 'U' THEN __old_part END) AS `old`",
+                # collect_set skips nulls: count them apart
+                f"count_if({p} IS NULL OR (__op = 'U' AND __old_part IS NULL)) AS nulls",
+            ]
+        obs = Observation()
+        changes.observe(obs, *map(F.expr, aggs)).write.format("noop").mode("overwrite").save()
+        stats = obs.get
+        n_updated, n_inserted = int(stats["updated"]), int(stats["inserted"])
+        if partition_col is not None and not stats["nulls"]:  # else full rewrite
+            touched = sorted(set(stats["new"]) | set(stats["old"]), key=str)
             kept_scoped = tgt.filter(
                 F.col(partition_col).isin(touched)
             ).join(updated_keys, on=key, how="left_anti")
             scoped = (
-                kept_scoped.unionByName(updated)
-                .unionByName(inserts)
-                .select(*[F.col(c) for c in cols])
+                kept_scoped.unionByName(updated).unionByName(inserts).selectExpr(*q_cols)
             )
     return MergeResult(
         df=out,
         inserted=n_inserted,
         updated=n_updated,
-        caches=(upd, inserts),
+        caches=(changes,),
         touched_partitions=touched,
         scoped_df=scoped,
     )
 
 
 def dedup_insert(tgt: DataFrame, src: DataFrame, key: str) -> MergeResult:
-    """INSERT-only-new via anti join on the surrogate key. The fresh
-    batch is persisted so the insert count and the append read one
-    materialization; callers unpersist via ``cleanup()``."""
-    from pyspark import StorageLevel
-
-    fresh = src.join(tgt.select(key), on=key, how="left_anti").select(
-        *[F.col(c) for c in tgt.columns]
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    return MergeResult(df=fresh, inserted=fresh.count(), updated=0, caches=(fresh,))
+    """INSERT-only-new via anti join on the surrogate key. Lazy: nothing
+    is persisted or counted, so ``inserted`` is -1 and the insert count
+    is the row count the caller's write observes (``Catalog.append``
+    returns it)."""
+    fresh = src.join(tgt.select(key), on=key, how="left_anti").selectExpr(
+        *map(quote_ident, tgt.columns)
+    )
+    return MergeResult(df=fresh, inserted=-1, updated=0)

@@ -9,13 +9,14 @@ violations (D5) raise; is_fresh_load (D6) is the ``fresh`` flag.
 Skip semantics match the reference's behavior: a bronze stage with no
 landing file for the run date leaves the *previous* bronze batch in
 place, and silver still runs over it — harmless because every silver
-strategy is idempotent (merge / keyed dedup / strict-> watermark), which
+strategy is idempotent (merge / keyed dedup / keyed strict-> watermark), which
 is the pipeline's core re-runnability contract (README.md:28,
 SURVEY.md §7.4.7) and is pinned by tests/test_pipeline.py.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -45,10 +46,12 @@ _BRONZE = (
     ("bronze_scholar", "googlescholar", "_", bz.bronze_scholar),
 )
 
-_SILVER = (
-    ("silver_arxiv", "arxiv", sv.silver_arxiv),
-    ("silver_nyt", "nytarchive", sv.silver_nyt),
-    ("silver_scholar", "googlescholar", sv.silver_scholar),
+_SILVER = tuple(
+    # stage name, silver table, loader
+    (name, spec.table, functools.partial(sv.load, spec=spec))
+    for name, spec in (
+        ("silver_arxiv", sv.ARXIV), ("silver_nyt", sv.NYT), ("silver_scholar", sv.SCHOLAR)
+    )
 )
 
 

@@ -16,7 +16,7 @@ from bc_proj3_spark.catalog import Catalog
 from bc_proj3_spark.io import sources
 from bc_proj3_spark.operators.incremental import PreconditionError, resolve_watermark
 from bc_proj3_spark.pipeline import run_pipeline
-from bc_proj3_spark.pipeline.silver import silver_arxiv
+from bc_proj3_spark.pipeline.silver import ARXIV, load
 
 RUN1, RUN2 = "20230401", "20230402"
 
@@ -121,7 +121,7 @@ def test_precondition_guard(spark, env):
     run_pipeline(spark, catalog, landing, RUN1)
     catalog.drop("silver", "watermark_arxiv")  # table without watermark
     with pytest.raises(PreconditionError):
-        silver_arxiv(spark, catalog)
+        load(spark, catalog, ARXIV)
 
 
 def test_no_files_skips_bronze_but_silver_reruns(spark, env):

@@ -6,7 +6,8 @@ they were stripped under ``PYTHONOPTIMIZE=1``, silently disabling
 validation in any optimized deployment. They now raise
 :class:`bc_proj3_spark.operators.incremental.ValidationError`; this
 test runs one silver stage in a ``PYTHONOPTIMIZE=1`` subprocess with an
-injected row loss and pins that the check still trips.
+injected row loss (a projection that drops a row) and pins that the
+check still trips.
 """
 
 from __future__ import annotations
@@ -21,17 +22,15 @@ import sys
 if sys.flags.optimize < 1:
     raise SystemExit("expected to run under PYTHONOPTIMIZE=1")
 
-from pyspark.sql import SparkSession
+import dataclasses
 
-# pyspark.sql.DataFrame is a facade in Spark 4; runtime frames are the
-# classic class — patch THAT, or the injection silently misses.
-from pyspark.sql.classic.dataframe import DataFrame
+from pyspark.sql import SparkSession
 
 from bc_proj3_spark.catalog import Catalog
 from bc_proj3_spark.io import sources
 from bc_proj3_spark.operators.incremental import ValidationError
 from bc_proj3_spark.pipeline.bronze import bronze_arxiv
-from bc_proj3_spark.pipeline.silver import silver_arxiv
+from bc_proj3_spark.pipeline.silver import ARXIV, load
 
 tmp = sys.argv[1]
 spark = (
@@ -45,22 +44,15 @@ catalog = Catalog(spark, tmp + "/warehouse")
 paths = sources.fetch_all("20230401", tmp + "/landing", epoch=1000)
 bronze_arxiv(spark, catalog, paths["arxiv"], "20230401")
 
-# Inject a row loss: silver_arxiv's FIRST count is the pre-transform
-# baseline; every later count (including the post-transform one the
-# conservation check compares against) comes up one short.
-real_count = DataFrame.count
-calls = {"n": 0}
-
-
-def lossy_count(self):
-    calls["n"] += 1
-    v = real_count(self)
-    return v if calls["n"] == 1 else v - 1
-
-
-DataFrame.count = lossy_count
+# Inject a row loss: a projection that drops one bronze row, so the
+# projected count the conservation check compares against comes up
+# one short of the bronze count.
+first_id = catalog.read("bronze", "arxiv").first()["id"]
+lossy = dataclasses.replace(
+    ARXIV, project=lambda b: ARXIV.project(b.filter(b["id"] != first_id))
+)
 try:
-    silver_arxiv(spark, catalog)
+    load(spark, catalog, lossy)
 except ValidationError as exc:
     if "rows lost" not in str(exc):
         raise SystemExit(f"wrong validation message: {exc}")
