@@ -12,14 +12,18 @@ rebuild the same table (the silver merge reads its target and replaces
 it): the new contents are fully materialized before the old directory
 is removed, and readers of the old snapshot were already satisfied.
 
-Each table's ``_meta`` entry (``<warehouse>/<layer>/_meta/<name>.json``)
-carries its logical column order, its partition columns and its schema
-(``df.schema.json()`` at overwrite time). Reads hand that schema to the
-parquet reader, so opening a table launches no schema-inference job; a
-``_meta`` written before schemas were recorded still reads through
-inference. Appends and partition-scoped overwrites must match the
-recorded schema (a mismatch raises ``ValueError``), so the stored schema
-can never hide a column the files carry.
+Each table directory holds its metadata in ``_catalog_meta.json``: the
+logical column order, the partition columns and the schema
+(``df.schema.jsonValue()`` at overwrite time). Overwrite writes it into
+the staging directory before the swap, so a table's files and its
+schema commit in one rename; Spark and pyarrow skip ``_``-prefixed
+files. The file is never rewritten in place (appends and
+partition-scoped overwrites keep the schema), so the hardlink snapshots
+of time travel carry their own copy. Reads hand the schema to the
+parquet reader, so opening a table launches no schema-inference job.
+Appends and partition-scoped overwrites must match the recorded schema
+(a mismatch raises ``ValueError``), so the stored schema can never hide
+a column the files carry.
 
 :meth:`Catalog.read_rows` reads a small table's rows in the driver with
 pyarrow, without a Spark job; the watermarks use it.
@@ -46,8 +50,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 LAYERS = ("bronze", "silver", "gold")
-#: copy of the table's ``_meta`` entry kept inside each snapshot
-_VERSION_META = "_catalog_meta.json"
+#: a table's metadata file, inside its directory
+_META = "_catalog_meta.json"
 
 
 def _write_counted(
@@ -74,8 +78,6 @@ def _check_schema(table: str, meta: dict, df: DataFrame) -> None:
     """Raise if ``df``'s columns or types differ from the schema recorded
     in ``meta`` (nullability and column order are not compared: parquet
     resolves columns by name and reads every column as nullable)."""
-    if not meta.get("schema"):
-        return
     want = {f.name: f.dataType.simpleString() for f in StructType.fromJson(meta["schema"])}
     got = {f.name: f.dataType.simpleString() for f in df.schema}
     if got != want:
@@ -84,6 +86,20 @@ def _check_schema(table: str, meta: dict, df: DataFrame) -> None:
             f"{table}: frame schema differs from the recorded one: "
             + ", ".join(f"{c} (table {want.get(c)}, frame {got.get(c)})" for c in diff)
         )
+
+
+def _write_meta(table_dir: Path, schema: StructType, partition_by: list[str] | None) -> None:
+    (table_dir / _META).write_text(
+        json.dumps({
+            "columns": schema.fieldNames(),
+            "partition_by": partition_by or [],
+            "schema": schema.jsonValue(),
+        })
+    )
+
+
+def _read_meta(table_dir: Path) -> dict:
+    return json.loads((table_dir / _META).read_text())
 
 
 class Catalog:
@@ -119,7 +135,7 @@ class Catalog:
         return sorted(
             p.name
             for p in base.iterdir()
-            # '_'-prefixed dirs are catalog metadata (_meta/_history/
+            # '_'-prefixed dirs are catalog metadata (_history/
             # _versions); 'tmp-' dirs are in-flight staged writes —
             # neither is a table even when it holds parquet files.
             if not p.name.startswith(("_", "tmp-")) and self.exists(layer, p.name)
@@ -137,7 +153,7 @@ class Catalog:
         """
         if not self.exists(layer, name):
             raise FileNotFoundError(f"table {layer}.{name} does not exist")
-        return self._load(self.path(layer, name), self._read_meta(layer, name))
+        return self._load(self.path(layer, name))
 
     def read_rows(self, layer: str, name: str) -> list[dict]:
         """A small table's rows as dicts, read in the driver with pyarrow:
@@ -149,16 +165,13 @@ class Catalog:
             raise FileNotFoundError(f"table {layer}.{name} does not exist")
         return pq.read_table(str(self.path(layer, name))).to_pylist()
 
-    def _load(self, path: Path, meta: dict | None) -> DataFrame:
-        """Parquet scan of ``path`` with the schema recorded in ``meta``
-        (no inference job), in the recorded column order."""
-        reader = self.spark.read
-        if meta and meta.get("schema"):
-            reader = reader.schema(StructType.fromJson(meta["schema"]))
-        df = reader.parquet(str(path))
-        cols = meta["columns"] if meta else None
-        if cols and set(cols) == set(df.columns) and cols != df.columns:
-            df = df.selectExpr(*map(quote_ident, cols))  # fewer JVM calls than select
+    def _load(self, path: Path) -> DataFrame:
+        """Parquet scan of a table (or snapshot) directory with its
+        recorded schema (no inference job), in the recorded column order."""
+        meta = _read_meta(path)
+        df = self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(str(path))
+        if meta["columns"] != df.columns:
+            df = df.selectExpr(*map(quote_ident, meta["columns"]))  # fewer JVM calls than select
         return df
 
     def overwrite(
@@ -173,12 +186,16 @@ class Catalog:
         # NOTE: no '.'/'_' prefix — Spark's file index silently ignores
         # hidden/metadata paths, which would break later reads of the dir.
         tmp = target.with_name(f"tmp-{name}-{uuid.uuid4().hex[:8]}")
-        rows = _write_counted(df, str(tmp), partition_by)  # materializes BEFORE the swap
+        try:
+            rows = _write_counted(df, str(tmp), partition_by)  # materializes BEFORE the swap
+            _write_meta(tmp, df.schema, partition_by)  # commits with the files
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         self._snapshot(layer, name)  # time-travel retention (no-op unless enabled)
         if target.exists():
             shutil.rmtree(target)
         tmp.rename(target)
-        self._write_meta(layer, name, df.schema, partition_by)
         return rows
 
     def overwrite_partitions(
@@ -200,8 +217,11 @@ class Catalog:
         value with no rows in ``df`` has its partition DELETED (the
         merge emptied it). Returns rows written.
         """
-        meta = self._read_meta(layer, name) or {}
-        pby = meta.get("partition_by") or []
+        target = self.path(layer, name)
+        if not target.is_dir():
+            raise FileNotFoundError(f"table {layer}.{name} does not exist")
+        meta = _read_meta(target)
+        pby = meta["partition_by"]
         if len(pby) != 1:
             raise ValueError(
                 f"{layer}.{name}: partition-scoped overwrite needs exactly one "
@@ -212,9 +232,6 @@ class Catalog:
             raise ValueError(
                 f"{layer}.{name}: null partition value — use full overwrite"
             )
-        target = self.path(layer, name)
-        if not target.is_dir():
-            raise FileNotFoundError(f"table {layer}.{name} does not exist")
         if not partition_values:
             return 0
         pcol = pby[0]
@@ -265,9 +282,8 @@ class Catalog:
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if not isinstance(cond, Column):
             raise TypeError(f"condition must be a Column or SQL string, got {type(condition)!r}")
-        meta = self._read_meta(layer, name) or {}
-        pby = meta.get("partition_by") or []
         current = self.read(layer, name)
+        pby = _read_meta(self.path(layer, name))["partition_by"]
         kept = current.filter(~F.coalesce(cond, F.lit(False)))
         matched = current.filter(F.coalesce(cond, F.lit(False)))
         if len(pby) == 1:
@@ -313,15 +329,17 @@ class Catalog:
     def append(self, layer: str, name: str, df: DataFrame) -> int:
         """INSERT INTO, honoring the table's recorded partition layout.
         Returns rows written, observed by the write job. ``df`` must
-        match the recorded schema (``ValueError`` otherwise). The caller
-        is responsible for dedup semantics (anti-join first, as in
-        silver_nyt_archive.py:102-120)."""
-        meta = self._read_meta(layer, name) or {}
+        match the recorded schema (``ValueError`` otherwise), and the
+        table must exist (``FileNotFoundError``; create it with
+        :meth:`overwrite`). The caller is responsible for dedup
+        semantics (anti-join first, as in silver_nyt_archive.py:102-120)."""
+        target = self.path(layer, name)
+        if not target.is_dir():
+            raise FileNotFoundError(f"table {layer}.{name} does not exist")
+        meta = _read_meta(target)
         _check_schema(f"{layer}.{name}", meta, df)
         self._snapshot(layer, name)  # pre-append state stays travelable
-        return _write_counted(
-            df, str(self.path(layer, name)), meta.get("partition_by"), mode="append"
-        )
+        return _write_counted(df, str(target), meta["partition_by"], mode="append")
 
     # -- time travel (hardlink snapshots) ---------------------------------
 
@@ -355,10 +373,8 @@ class Catalog:
         n = (vs[-1] + 1) if vs else 0
         dst = self._versions_dir(layer, name) / f"v{n}"
         dst.parent.mkdir(parents=True, exist_ok=True)
+        # the hardlinked tree includes the table's _catalog_meta.json
         shutil.copytree(self.path(layer, name), dst, copy_function=os.link)
-        meta = self._meta_path(layer, name)
-        if meta.exists():  # the snapshot's own schema ('_' files: unseen by Spark)
-            shutil.copyfile(meta, dst / _VERSION_META)
         for old in self.versions(layer, name)[: -self.retain_versions]:
             shutil.rmtree(self._versions_dir(layer, name) / f"v{old}")
         return n
@@ -375,12 +391,7 @@ class Catalog:
             raise FileNotFoundError(
                 f"{layer}.{name}: version {version} not retained (have {vs})"
             )
-        vdir = self._versions_dir(layer, name) / f"v{v}"
-        vmeta = vdir / _VERSION_META
-        if vmeta.exists():
-            return self._load(vdir, json.loads(vmeta.read_text()))
-        meta = self._read_meta(layer, name)  # snapshot taken without a schema
-        return self._load(vdir, meta and {"columns": meta["columns"]})
+        return self._load(self._versions_dir(layer, name) / f"v{v}")
 
     def compact(
         self,
@@ -418,11 +429,10 @@ class Catalog:
         (DESCRIBE HISTORY parity — Delta's OPTIMIZE shows up the same
         way).
         """
-        meta = self._read_meta(layer, name) or {}
-        pby = meta.get("partition_by") or []
         target = self.path(layer, name)
         if not self.exists(layer, name):
             raise FileNotFoundError(f"table {layer}.{name} does not exist")
+        pby = _read_meta(target)["partition_by"]
         if zorder_by and pby:
             raise ValueError(
                 "zorder_by applies to unpartitioned tables; a partitioned "
@@ -497,34 +507,12 @@ class Catalog:
         p = self.path(layer, name)
         if p.exists():
             shutil.rmtree(p)
-        for meta in (self._history_path(layer, name), self._meta_path(layer, name)):
-            if meta.exists():
-                meta.unlink()
+        history = self._history_path(layer, name)
+        if history.exists():
+            history.unlink()
         vdir = self._versions_dir(layer, name)
         if vdir.exists():
             shutil.rmtree(vdir)
-
-    # -- table metadata (logical column order + partition spec) -----------
-
-    def _meta_path(self, layer: str, name: str) -> Path:
-        return self.warehouse / layer / "_meta" / f"{name}.json"
-
-    def _write_meta(
-        self, layer: str, name: str, schema: StructType, partition_by: list[str] | None
-    ) -> None:
-        p = self._meta_path(layer, name)
-        p.parent.mkdir(parents=True, exist_ok=True)
-        p.write_text(
-            json.dumps({
-                "columns": schema.fieldNames(),
-                "partition_by": partition_by or [],
-                "schema": schema.jsonValue(),
-            })
-        )
-
-    def _read_meta(self, layer: str, name: str) -> dict | None:
-        p = self._meta_path(layer, name)
-        return json.loads(p.read_text()) if p.exists() else None
 
     # -- operation history (DESCRIBE HISTORY parity, SURVEY.md §2.1 S15) --
 

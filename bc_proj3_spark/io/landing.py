@@ -29,8 +29,10 @@ class NoFilesForRunDate(Exception):
 
 
 def format_run_date(run_date: str, sep: str) -> str:
-    """'YYYYMMDD' → 'YYYY<sep>MM<sep>DD' (bronze_arxiv.py:26)."""
-    assert len(run_date) == 8, f"run_date must be YYYYMMDD, got {run_date!r}"
+    """'YYYYMMDD' → 'YYYY<sep>MM<sep>DD' (bronze_arxiv.py:26). Raises
+    ``ValueError`` unless ``run_date`` is 8 ASCII digits."""
+    if not (len(run_date) == 8 and run_date.isascii() and run_date.isdigit()):
+        raise ValueError(f"run_date must be YYYYMMDD, got {run_date!r}")
     return f"{run_date[:4]}{sep}{run_date[4:6]}{sep}{run_date[6:]}"
 
 

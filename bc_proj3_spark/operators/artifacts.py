@@ -42,23 +42,40 @@ def _artifact_path(sf_dir: str, name: str) -> str | None:
     return os.path.join(spill, f"{name}_{tag}")
 
 
+def _published(sf_dir: str, name: str) -> str | None:
+    """Path of the artifact when the seam is on and its owner has
+    published it, else None."""
+    path = _artifact_path(sf_dir, name)
+    if path is None or not os.path.exists(os.path.join(path, "_SUCCESS")):
+        return None
+    return path
+
+
+def _artifact_read(spark: SparkSession, path: str) -> DataFrame:
+    """A published artifact as a persisted, materialized frame. Not
+    memoized: :func:`_artifact_restore` memoizes consumer restores,
+    while an index with its own session cache (dedup's shingle index)
+    reads through this directly."""
+    from pyspark import StorageLevel
+
+    out = spark.read.parquet(path).persist(StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    return out
+
+
 def _artifact_restore(
     spark: SparkSession, sf_dir: str, name: str
 ) -> DataFrame | None:
     """Restore a published artifact as a persisted frame, or None when
     the seam is off / the owner hasn't published yet."""
-    path = _artifact_path(sf_dir, name)
-    if path is None or not os.path.exists(os.path.join(path, "_SUCCESS")):
+    path = _published(sf_dir, name)
+    if path is None:
         return None
     key = (spark.sparkContext.applicationId, sf_dir, name)
     hit = _ARTIFACT_CACHE.get(key)
     if hit is not None and hit.is_cached:
         return hit
-    from pyspark import StorageLevel
-
-    out = spark.read.parquet(path).persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    _ARTIFACT_CACHE[key] = out
+    out = _ARTIFACT_CACHE[key] = _artifact_read(spark, path)
     return out
 
 
@@ -76,7 +93,7 @@ def _artifact_publish(df: DataFrame, sf_dir: str, name: str) -> bool:
     result frame is persisted use this to skip the redundant
     materialization count — the write job already filled the cache)."""
     path = _artifact_path(sf_dir, name)
-    if path is None or os.path.exists(os.path.join(path, "_SUCCESS")):
+    if path is None or _published(sf_dir, name):
         return False
     try:
         df.write.mode("overwrite").parquet(path)

@@ -236,10 +236,10 @@ def cdc3_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: merge_upsert's key join and anti join + one anti join
     on the delete-key list — all shuffles on the merge key; with both
-    versions bucketed on the key they co-locate. The persisted merge
-    changes are released before returning (the plan recomputes them
-    lazily — at driver scale that is one batch-sized join, not a table
-    scan).
+    versions bucketed on the key they co-locate. Without a partition
+    plan the merge launches no job, and its persisted changes are
+    released before returning (the plan recomputes them lazily — at
+    driver scale that is one batch-sized join, not a table scan).
     """
     v1, v2 = _snapshots(table(spark, sf_dir, "orders"))
     changed: Column = F.lit(False)

@@ -36,15 +36,13 @@ Scale shape (100 TB posture):
 
 from __future__ import annotations
 
-import contextlib
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bc_proj3_spark.operators.dedup import d4_pairs_artifact
 from bc_proj3_spark.plans.tables import local_rows_df, table
 from bc_proj3_spark.registry import register
+from bc_proj3_spark.session import scoped_conf
 
 #: Shuffle width for the ITERATION phases. The iterated frames (rank
 #: vectors, label tables, star edges) are subgraph-sized — bounded by
@@ -54,8 +52,9 @@ from bc_proj3_spark.registry import register
 #: rounds from 32 to 4 partitions). The corpus-scale stage (d4's pair
 #: generation) materializes BEFORE the iteration starts (persisted by
 #: _verified_jaccard), so sizing here never touches corpus shuffles.
-#: On a cluster, size to the expected pair-subgraph volume.
-GRAPH_ITER_SHUFFLE = os.environ.get("SPARK_GRAFT_GRAPH_SHUFFLE", "8")
+#: On a cluster, size to the expected pair-subgraph volume. Set for
+#: each iteration phase only (``scoped_conf``).
+_ITER_CONF = {"spark.sql.shuffle.partitions": "8"}
 
 #: AQE inside an iteration phase whose small side is EXPLICITLY
 #: broadcast (g13's gated rank-vector broadcast): adaptive re-planning
@@ -67,25 +66,8 @@ GRAPH_ITER_SHUFFLE = os.environ.get("SPARK_GRAFT_GRAPH_SHUFFLE", "8")
 #: output). Loops WITHOUT an explicit broadcast must keep AQE: its
 #: runtime size discovery is what converts their per-round shuffle
 #: joins to broadcast joins (measured: disabling it cost g11/g12/cc2
-#: +1.2-2 s each). Env-overridable for cluster tuning.
-GRAPH_ITER_AQE = os.environ.get("SPARK_GRAFT_GRAPH_ITER_AQE", "false")
-
-
-@contextlib.contextmanager
-def _iter_shuffle(spark: SparkSession, aqe: str | None = None):
-    """Size the shuffle width for an iteration phase; optionally pin
-    AQE (pass ``aqe="false"`` ONLY for loops that broadcast their
-    small side explicitly — see GRAPH_ITER_AQE note)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", GRAPH_ITER_SHUFFLE)
-    if aqe is not None:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+#: +1.2-2 s each).
+_ITER_BCAST_CONF = {**_ITER_CONF, "spark.sql.adaptive.enabled": "false"}
 
 
 #: Convergence safeguard. Propagation needs diameter(G) rounds; a
@@ -129,7 +111,7 @@ def min_label_components(edges: DataFrame) -> DataFrame:
         return out, obs.get["label_sum"]
 
     spark = edges.sparkSession
-    with _iter_shuffle(spark):
+    with scoped_conf(spark, _ITER_CONF):
         return _min_label_iterate(edges, _ckpt_with_sum)
 
 
@@ -271,7 +253,7 @@ def star_components(edges: DataFrame, max_iters: int = 40) -> DataFrame:
         m = obs.get
         return out, (m["n"], m["hsum"])
 
-    with _iter_shuffle(edges.sparkSession):
+    with scoped_conf(edges.sparkSession, _ITER_CONF):
         return _star_iterate(edges, max_iters, _ckpt_with_sig)
 
 
@@ -440,7 +422,7 @@ def cc3_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     damped product runs in DECIMAL(38,0) so a hot node's summed
     contributions cannot overflow 64 bits at any scale."""
     pairs = d4_pairs_artifact(spark, sf_dir).select("doc_a", "doc_b")
-    with _iter_shuffle(spark):
+    with scoped_conf(spark, _ITER_CONF):
         return _pagerank_iterate(spark, pairs, sf_dir)
 
 
@@ -738,7 +720,7 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame) -> DataFrame:
         ).localCheckpoint(eager=True)
         return out, obs.get["n_new"]
 
-    with _iter_shuffle(spark):
+    with scoped_conf(spark, _ITER_CONF):
         edges = edges.localCheckpoint(eager=True)
         known, _ = _ckpt_count_at(
             seeds.select("doc_id", F.lit(0).cast("int").alias("dist")), 0
@@ -1196,7 +1178,7 @@ def g6_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = edges
     from pyspark.sql import Observation
 
-    with _iter_shuffle(spark):
+    with scoped_conf(spark, _ITER_CONF):
         for i in range(1, KCORE_ROUNDS + 1):
             # One degree aggregate per round: the survivor set is
             # checkpointed (it is referenced twice by the semi joins
@@ -1664,7 +1646,7 @@ def g11_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the census rides those bounded per-round jobs and assembles
     driver-side (LP_ROUNDS+1 rows of three ints, g6's precedent)."""
     edges, directed = _lp_edges(spark, sf_dir)
-    with _iter_shuffle(spark):
+    with scoped_conf(spark, _ITER_CONF):
         labels = _lp_iterate(directed)
         # ONE census job for the whole trajectory: every checkpointed
         # round already carries (lab, plab), so a union of the bounded
@@ -1764,7 +1746,7 @@ def g12_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     final top-k compiles to TakeOrderedAndProject. Nothing
     community-count-sized is ever collected or broadcast."""
     edges, directed = _lp_edges(spark, sf_dir)
-    with _iter_shuffle(spark):
+    with scoped_conf(spark, _ITER_CONF):
         final = _lp_iterate(directed)[-1]
     m = edges.count()
     deg = directed.groupBy(F.col("src").alias("node")).agg(
@@ -1837,9 +1819,7 @@ HITS_TOP_K = 10
 #: (an upper bound on either vector's row count) stays under this many
 #: rows (~16 bytes/row → tens of MB built); past it, plain shuffle
 #: joins. Same gating idea as tc1's _maybe_bcast.
-HITS_BCAST_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_HITS_BCAST_MAX_EDGES", "5000000")
-)
+HITS_BCAST_MAX_EDGES = 5_000_000
 
 
 def _hits_halfup(a: str, b: str) -> str:
@@ -1953,9 +1933,9 @@ def g13_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     _mb = F.broadcast if _use_bcast else (lambda df: df)
     a = None
     # AQE is pinned off only on the broadcast path (strategy already
-    # decided; see GRAPH_ITER_AQE note) — past the gate the shuffle
-    # joins keep AQE's runtime re-planning.
-    with _iter_shuffle(spark, aqe=GRAPH_ITER_AQE if _use_bcast else None):
+    # decided; see _ITER_BCAST_CONF) — past the gate the shuffle joins
+    # keep AQE's runtime re-planning.
+    with scoped_conf(spark, _ITER_BCAST_CONF if _use_bcast else _ITER_CONF):
         for _ in range(HITS_ROUNDS):
             # One job per half-round: the raw edge-keyed aggregate is
             # the checkpoint, and the 1-row L1 normalizer rides that

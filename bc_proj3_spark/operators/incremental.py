@@ -25,10 +25,12 @@ rewrite plan (touched partitions + their replacement rows), which
 ``Catalog.overwrite_partitions`` turns into Delta-style file pruning:
 the daily upsert rewrites only the run_date partitions the batch
 touches, not the table.
-Metrics (inserted/updated) are observed on the same join results the
-rewrite already materializes (dedup insert leaves its count to the
-append's own observation) — the engine-side stand-in for
-DESCRIBE HISTORY's operationMetrics (silver_arxiv.py:175-184, S15).
+
+With a partition plan, the merge's metrics (inserted/updated) are
+observed on the same join results the rewrite then reads from cache;
+without one the merge stays lazy and reports -1 (dedup insert leaves
+its count to the append's own observation) — the engine-side stand-in
+for DESCRIBE HISTORY's operationMetrics (silver_arxiv.py:175-184, S15).
 """
 
 from __future__ import annotations
@@ -39,8 +41,6 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from bc_proj3_spark.catalog import Catalog, quote_ident
-
-EPOCH_WATERMARK = "1970-01-01"
 
 
 class PreconditionError(Exception):
@@ -58,6 +58,8 @@ class ValidationError(Exception):
 @dataclass
 class MergeResult:
     df: DataFrame
+    #: -1 when not counted (a merge without a partition plan, or the
+    #: dedup insert, whose count is the append's observation)
     inserted: int
     updated: int
     #: frames persisted by the merge so metrics + write share one
@@ -90,8 +92,8 @@ def watermark_name(table: str) -> str:
 
 def resolve_watermark(catalog: Catalog, table: str) -> str | None:
     """Initial-load cursor resolution (silver_arxiv.py:38-50): neither
-    table nor watermark → epoch; both → stored value; mixed → error.
-    Returns None when the target doesn't exist yet (first load)."""
+    table nor watermark → None (first load: the caller overwrites, no
+    filter); both → the stored value; mixed → ``PreconditionError``."""
     has_table = catalog.exists("silver", table)
     has_wm = catalog.exists("silver", watermark_name(table))
     if not has_table and not has_wm:
@@ -127,7 +129,6 @@ def merge_upsert(
     key: str,
     update_when: Column,
     partition_col: str | None = None,
-    eager_metrics: bool = True,
 ) -> MergeResult:
     """Pure-Spark MERGE: update matched rows satisfying ``update_when``
     (a predicate over ``tgt.<c>``/``src.<c>`` aliases), insert unmatched
@@ -137,12 +138,13 @@ def merge_upsert(
     per article id after the latest-file pick).
 
     One left join of the batch against the target classifies each batch
-    row as update, insert or no change; the batch-sized changed rows are
-    persisted and materialized by one scan-only metrics job (observed
-    aggregates, no shuffle), so the final write reads them from cache
-    instead of re-running the join — metrics and rewrite share one
-    computation. Callers unpersist via ``MergeResult.cleanup()`` once
+    row as update, insert or no change, and the batch-sized changed rows
+    are persisted. Callers unpersist via ``MergeResult.cleanup()`` once
     the result is written.
+
+    Without ``partition_col`` the merge launches no job: the caller's
+    first action on ``df`` fills the cache, and ``inserted``/``updated``
+    are -1.
 
     ``partition_col``: when the target table is laid out by this column
     (e.g. run_date), also compute the partition-scoped rewrite plan —
@@ -154,7 +156,10 @@ def merge_upsert(
     updated ∪ inserts — everything ``Catalog.overwrite_partitions``
     needs to rewrite only that data. The kept-rows filter is a
     partition-pruning predicate, so the scoped plan never scans the
-    untouched table. The touched values come from the same metrics job.
+    untouched table. One scan-only job (observed aggregates, no
+    shuffle) materializes the cache and yields the touched values and
+    the updated/inserted counts, so metrics and rewrite share one
+    computation.
     """
     from pyspark import StorageLevel
 
@@ -185,46 +190,35 @@ def merge_upsert(
     # promotes the key column to the front of `kept`
     out = kept.unionByName(updated).unionByName(inserts).selectExpr(*q_cols)
 
+    res = MergeResult(df=out, inserted=-1, updated=-1, caches=(changes,))
+    if partition_col is None:
+        return res
     # one scan-only job (a noop sink: no shuffle) fills the cache and
     # observes the updated count, the inserted count and the touched
     # partitions (an updated row touches its old and its new partition,
-    # an insert its new one). ``eager_metrics=False`` (st8's per-batch
-    # path) skips it when no partition plan is asked for: the caller's
-    # single action on ``df`` then fills the cache and inserted/updated
-    # stay -1 (unknown).
-    n_updated = n_inserted = -1
-    touched: list | None = None
-    scoped: DataFrame | None = None
-    if eager_metrics or partition_col is not None:
-        aggs = ["count_if(__op = 'U') AS updated", "count_if(__op = 'I') AS inserted"]
-        if partition_col is not None:
-            p = quote_ident(partition_col)
-            aggs += [
-                f"collect_set({p}) AS `new`",
-                "collect_set(CASE WHEN __op = 'U' THEN __old_part END) AS `old`",
-                # collect_set skips nulls: count them apart
-                f"count_if({p} IS NULL OR (__op = 'U' AND __old_part IS NULL)) AS nulls",
-            ]
-        obs = Observation()
-        changes.observe(obs, *map(F.expr, aggs)).write.format("noop").mode("overwrite").save()
-        stats = obs.get
-        n_updated, n_inserted = int(stats["updated"]), int(stats["inserted"])
-        if partition_col is not None and not stats["nulls"]:  # else full rewrite
-            touched = sorted(set(stats["new"]) | set(stats["old"]), key=str)
-            kept_scoped = tgt.filter(
-                F.col(partition_col).isin(touched)
-            ).join(updated_keys, on=key, how="left_anti")
-            scoped = (
-                kept_scoped.unionByName(updated).unionByName(inserts).selectExpr(*q_cols)
-            )
-    return MergeResult(
-        df=out,
-        inserted=n_inserted,
-        updated=n_updated,
-        caches=(changes,),
-        touched_partitions=touched,
-        scoped_df=scoped,
-    )
+    # an insert its new one)
+    p = quote_ident(partition_col)
+    aggs = [
+        "count_if(__op = 'U') AS updated",
+        "count_if(__op = 'I') AS inserted",
+        f"collect_set({p}) AS `new`",
+        "collect_set(CASE WHEN __op = 'U' THEN __old_part END) AS `old`",
+        # collect_set skips nulls: count them apart
+        f"count_if({p} IS NULL OR (__op = 'U' AND __old_part IS NULL)) AS nulls",
+    ]
+    obs = Observation()
+    changes.observe(obs, *map(F.expr, aggs)).write.format("noop").mode("overwrite").save()
+    stats = obs.get
+    res.updated, res.inserted = int(stats["updated"]), int(stats["inserted"])
+    if not stats["nulls"]:  # else the caller falls back to a full rewrite
+        res.touched_partitions = sorted(set(stats["new"]) | set(stats["old"]), key=str)
+        kept_scoped = tgt.filter(
+            F.col(partition_col).isin(res.touched_partitions)
+        ).join(updated_keys, on=key, how="left_anti")
+        res.scoped_df = (
+            kept_scoped.unionByName(updated).unionByName(inserts).selectExpr(*q_cols)
+        )
+    return res
 
 
 def dedup_insert(tgt: DataFrame, src: DataFrame, key: str) -> MergeResult:

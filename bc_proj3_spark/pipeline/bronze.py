@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bc_proj3_spark.catalog import Catalog
+from bc_proj3_spark.session import scoped_conf
 
 
 def _audit(df: DataFrame, file_path: str, run_date: str) -> DataFrame:
@@ -50,16 +51,12 @@ def bronze_nyt(
     resolution (bronze_ny_times.py:2,61-80 — the reference sets
     caseSensitive cluster-wide; here it is scoped to this read and
     restored, per SURVEY.md §7.4.6)."""
-    prev = spark.conf.get("spark.sql.caseSensitive")
-    spark.conf.set("spark.sql.caseSensitive", "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.caseSensitive": "true"}):
         raw = spark.read.json(file_path)
         flat = raw.select("_airbyte_data.*")
         keep = [c for c in flat.columns if c != "multimedia"]
         out = _audit(flat.select(*keep), file_path, run_date)
         return catalog.overwrite("bronze", "nytarchive", out)
-    finally:
-        spark.conf.set("spark.sql.caseSensitive", prev)
 
 
 def bronze_scholar(

@@ -196,9 +196,12 @@ def gold_scoring(spark: SparkSession, catalog: Catalog) -> int:
         df.withColumn("vector_unique", unique_lemmas(F.col("words")))
         .withColumn("article_raw_score", score_tokens(F.col("vector_unique")))
         .withColumn("unique_words", F.size("vector_unique"))
+        # an article with no scorable word (empty or only stopwords) has
+        # unique_words = 0: try_divide gives NULL, which the > 0 filter
+        # below drops, as the reference's non-ANSI divide then filter does
         .withColumn(
             "article_score",
-            F.lit(1.0) * F.col("article_raw_score") / F.col("unique_words"),
+            F.try_divide(F.lit(1.0) * F.col("article_raw_score"), F.col("unique_words")),
         )
     )
     cols = ("source", "source_sk", "publish_dt", "words",

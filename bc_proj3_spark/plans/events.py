@@ -13,8 +13,6 @@ Determinism: window orderings always carry a unique tiebreaker
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -297,32 +295,26 @@ def _slope_batch(pdf):
     )
 
 
-#: Grouped-map fan-in for e4b: applyInPandas crosses the Python
-#: boundary once PER GROUP, so grouping directly by user_id ships
-#: thousands of few-row Arrow batches (guide §4: tiny batches are the
-#: anti-pattern). Grouping by a hash BUCKET of the user key instead
-#: sends ~this many large batches and the per-user math runs as a
-#: pandas groupby INSIDE the worker — same per-user row subsets, same
-#: Series arithmetic, identical floats. Buckets cap Python CALL
-#: overhead, not state: one bucket's rows (~n_events/N_BUCKETS) are
-#: concatenated into a single pandas frame in one worker, so the
-#: bucket count bounds per-worker memory and MUST scale with input
-#: size (r10 verdict item 2 — a constant 32 is a worker-memory cliff
-#: at 100 TB). Env-parameterized like the other scale knobs
-#: (SPARK_GRAFT_STREAM_SHUFFLE precedent); the default derives from
-#: the session's shuffle width — itself env/cluster-sized — at one
-#: bucket per shuffle slot, so a bucket holds the row volume a shuffle
-#: partition already must hold (and the local default reproduces
-#: r10's measured-best 32).
-#: Result-invariant by construction: the bucket id never appears in
-#: the output and every user's rows land in exactly one bucket
-#: whatever the count.
-E4B_BUCKETS = int(os.environ.get("SPARK_GRAFT_E4B_BUCKETS", "0"))
-
-
 def _e4b_buckets(spark: SparkSession) -> int:
-    if E4B_BUCKETS > 0:
-        return E4B_BUCKETS
+    """Grouped-map fan-in for e4b: applyInPandas crosses the Python
+    boundary once PER GROUP, so grouping directly by user_id ships
+    thousands of few-row Arrow batches (guide §4: tiny batches are the
+    anti-pattern). Grouping by a hash BUCKET of the user key instead
+    sends ~this many large batches and the per-user math runs as a
+    pandas groupby INSIDE the worker — same per-user row subsets, same
+    Series arithmetic, identical floats. Buckets cap Python CALL
+    overhead, not state: one bucket's rows (~n_events/buckets) are
+    concatenated into a single pandas frame in one worker, so the
+    bucket count bounds per-worker memory and MUST scale with input
+    size (r10 verdict item 2 — a constant 32 is a worker-memory cliff
+    at 100 TB). The count is the session's shuffle width — itself
+    cluster-sized — at one bucket per shuffle slot, so a bucket holds the
+    row volume a shuffle partition already must hold (and the local
+    default reproduces r10's measured-best 32).
+    Result-invariant by construction: the bucket id never appears in
+    the output and every user's rows land in exactly one bucket
+    whatever the count.
+    """
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 

@@ -19,13 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bc_proj3_spark.pipeline.silver import _DAYS_AGO_RE, days_ago
 from bc_proj3_spark.plans.tables import table
 from bc_proj3_spark.registry import register
 
 RUN_DATE = "1998-06-01"  # the run_date widget of the reference, as a param
-
-# "N days ago" prefix, as in scholar snippets (silver_google_scholar.py:108)
-_DAYS_AGO_RE = r"^\s*(\d+)\s+days? ago"
 
 
 # ---------------------------------------------------------------------------
@@ -67,7 +65,9 @@ def sv1_scholar_date_derivation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``int('')`` crash on digit-less snippets both become a clean null →
     run_date fallback. Snippets are constructed in-query (the testdata
     has no scholar feed); the identical construction lives in the
-    oracle, so the parse is what is being verified."""
+    oracle, so the parse is what is being verified. The parse is the
+    silver pipeline's own :func:`~bc_proj3_spark.pipeline.silver.days_ago`
+    and regex, so the oracle checks the code the daily run executes."""
     docs = table(spark, sf_dir, "documents")
     snippet = (
         F.when(
@@ -84,10 +84,7 @@ def sv1_scholar_date_derivation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.col("text"))
     )
-    days = F.when(
-        snippet.rlike(_DAYS_AGO_RE),
-        F.regexp_extract(snippet, _DAYS_AGO_RE, 1).cast("int"),
-    )
+    days = days_ago(snippet)
     run_date = F.lit(RUN_DATE).cast("date")
     return docs.select(
         "doc_id",

@@ -66,10 +66,6 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def fanout(df: DataFrame) -> DataFrame:
     """Repartition a narrow scan before per-row-heavy work (regex
     tokenization, shingle explode, hash families, vector math, Python

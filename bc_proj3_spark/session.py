@@ -15,11 +15,12 @@ tests and on a multi-executor cluster unchanged:
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark", "apply_runtime_conf"]
+__all__ = ["get_spark", "stop_spark", "apply_runtime_conf", "scoped_conf"]
 
 #: SQL confs that are safe to set on an already-running session and that
 #: the engine's plans depend on. The correctness driver hands us *its*
@@ -71,6 +72,22 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
         except Exception:  # pragma: no cover - conf not recognized/static
             pass
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session for the duration of the block, then
+    restore each key's previous value; keys are read, set and restored
+    in ``conf``'s order. Meant for a block that owns the session while
+    it runs (nothing concurrent reads these confs)."""
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def get_spark(

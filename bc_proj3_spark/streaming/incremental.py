@@ -38,16 +38,8 @@ from pyspark.sql import functions as F
 from bc_proj3_spark.functions.joins import gated_broadcast
 from bc_proj3_spark.plans.tables import _normalize_event_ts, table
 from bc_proj3_spark.registry import register
+from bc_proj3_spark.session import scoped_conf
 
-#: Shuffle width for the registered streaming demos' STATE stores.
-#: Stateful streaming fixes its shuffle-partition count at the first
-#: checkpoint and every micro-batch then pays per-partition state-store
-#: overhead (open/commit/snapshot × sides × partitions) regardless of
-#: data volume — measured 3× end-to-end on the stream-stream join at
-#: sf0.1 (8 partitions: 2.7 s; 32: 8 s). Unlike batch, AQE cannot
-#: coalesce this, so it must be SIZED: to expected peak state volume on
-#: a cluster (hundreds for 100 TB feeds), small for bounded demo
-#: drains. Env-overridable like the batch width.
 #: Scratch base for EPHEMERAL drain state (per-call checkpoint dirs,
 #: st8's staged feed). Every registered streaming query creates a fresh
 #: checkpoint per call and deletes it on exit — the dir is scratch by
@@ -78,23 +70,19 @@ def _scratch_dir(prefix: str):
         shutil.rmtree(d, ignore_errors=True)
 
 
-STREAM_SHUFFLE = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-
-
-@contextlib.contextmanager
-def _stream_shuffle(spark: SparkSession):
-    """Temporarily size shuffle partitions for a stateful stream drain.
-
-    Safe here because each registered streaming query drains its whole
-    backlog with AvailableNow inside the builder call (fresh checkpoint
-    per call, nothing concurrent on the session); a long-lived
-    deployment would instead set the conf once at stream start."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+#: Shuffle width for the registered streaming demos' STATE stores.
+#: Stateful streaming fixes its shuffle-partition count at the first
+#: checkpoint and every micro-batch then pays per-partition state-store
+#: overhead (open/commit/snapshot × sides × partitions) regardless of
+#: data volume — measured 3× end-to-end on the stream-stream join at
+#: sf0.1 (8 partitions: 2.7 s; 32: 8 s). Unlike batch, AQE cannot
+#: coalesce this, so it must be SIZED: to expected peak state volume on
+#: a cluster (hundreds for 100 TB feeds), small for bounded demo
+#: drains. Set for the drain only (``scoped_conf``): each registered
+#: streaming query drains its whole backlog with AvailableNow inside the
+#: builder call (fresh checkpoint per call, nothing concurrent on the
+#: session); a long-lived deployment would set it once at stream start.
+_STREAM_CONF = {"spark.sql.shuffle.partitions": "8"}
 
 _ST1_ORACLE = """
 SELECT
@@ -130,7 +118,7 @@ def st1_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     sink = f"st1_sink_{uuid.uuid4().hex[:8]}"
-    with _scratch_dir(prefix="st1-ckpt-") as ckpt, _stream_shuffle(spark):
+    with _scratch_dir(prefix="st1-ckpt-") as ckpt, scoped_conf(spark, _STREAM_CONF):
         # AvailableNow drains the whole backlog in this one call, so the
         # checkpoint is dead state once the query terminates — scope it
         # to the drain (a restartable deployment passes a durable dir).
@@ -228,7 +216,10 @@ def stream_silver_arxiv(
             key="id",
             update_when=F.col("src.version") > F.col("tgt.version"),
         )
-        catalog.overwrite("silver", "arxiv_stream", res.df)
+        try:
+            catalog.overwrite("silver", "arxiv_stream", res.df)
+        finally:
+            res.cleanup()  # release this micro-batch's merge changes
 
     query = (
         keyed.writeStream.foreachBatch(_upsert)
@@ -323,7 +314,7 @@ def st3_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sink = f"st3_sink_{uuid.uuid4().hex[:8]}"
-    with _scratch_dir(prefix="st3-ckpt-") as ckpt, _stream_shuffle(spark):
+    with _scratch_dir(prefix="st3-ckpt-") as ckpt, scoped_conf(spark, _STREAM_CONF):
         query = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -405,7 +396,7 @@ def st2_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     sink = f"st2_sink_{uuid.uuid4().hex[:8]}"
-    with _scratch_dir(prefix="st2-ckpt-") as ckpt, _stream_shuffle(spark):
+    with _scratch_dir(prefix="st2-ckpt-") as ckpt, scoped_conf(spark, _STREAM_CONF):
         # checkpoint scoped to the AvailableNow drain, as in st1
         query = (
             out.writeStream.format("memory")
@@ -457,7 +448,7 @@ def st4_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id", "event_type"]
     )
     sink = f"st4_sink_{uuid.uuid4().hex[:8]}"
-    with _scratch_dir(prefix="st4-ckpt-") as ckpt, _stream_shuffle(spark):
+    with _scratch_dir(prefix="st4-ckpt-") as ckpt, scoped_conf(spark, _STREAM_CONF):
         query = (
             deduped.writeStream.format("memory")
             .queryName(sink)
@@ -537,7 +528,7 @@ def st5_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).select("user_id", "view_ts", "purchase_ts", "purchase_value")
     sink = f"st5_sink_{uuid.uuid4().hex[:8]}"
-    with _scratch_dir(prefix="st5-ckpt-") as ckpt, _stream_shuffle(spark):
+    with _scratch_dir(prefix="st5-ckpt-") as ckpt, scoped_conf(spark, _STREAM_CONF):
         query = (
             joined.writeStream.format("memory")
             .queryName(sink)
@@ -590,7 +581,7 @@ def st6_stream_append_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     sink = f"st6_sink_{uuid.uuid4().hex[:8]}"
-    with _scratch_dir(prefix="st6-ckpt-") as ckpt, _stream_shuffle(spark):
+    with _scratch_dir(prefix="st6-ckpt-") as ckpt, scoped_conf(spark, _STREAM_CONF):
         query = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -653,7 +644,7 @@ def st7_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("value_sum"),
     )
     sink = f"st7_sink_{uuid.uuid4().hex[:8]}"
-    with _scratch_dir(prefix="st7-ckpt-") as ckpt, _stream_shuffle(spark):
+    with _scratch_dir(prefix="st7-ckpt-") as ckpt, scoped_conf(spark, _STREAM_CONF):
         query = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -737,8 +728,8 @@ def st8_stream_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r11 per-batch job trim: no eager localCheckpoint of the batch
         # (it is one small parquet file the source just listed — its two
         # filter branches re-scan it for less than the checkpoint job
-        # cost) and no merge metric counts (eager_metrics=False; the
-        # one localCheckpoint action below materializes the merge's
+        # cost) and no merge metric counts (no partition plan: the one
+        # localCheckpoint action below materializes the merge's
         # persisted branches). 3 jobs/batch → 1.
         b_ups = batch_df.filter(F.col("change_type") == "upsert").select(
             "o_orderkey", *_VALUE_COLS
@@ -754,7 +745,6 @@ def st8_stream_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             b_ups,
             key="o_orderkey",
             update_when=changed,
-            eager_metrics=False,
         )
         cur = res.df.join(b_del, "o_orderkey", "left_anti").localCheckpoint(
             eager=True
@@ -770,7 +760,7 @@ def st8_stream_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(feed_dir)
         )
-        with _stream_shuffle(spark):
+        with scoped_conf(spark, _STREAM_CONF):
             q = (
                 src.writeStream.foreachBatch(_apply)
                 .option("checkpointLocation", ckpt)
@@ -844,7 +834,7 @@ def st9_stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max(rho).cast("int").alias("max_rho"))
     )
     sink = f"st9_sink_{uuid.uuid4().hex[:8]}"
-    with _scratch_dir(prefix="st9-ckpt-") as ckpt, _stream_shuffle(spark):
+    with _scratch_dir(prefix="st9-ckpt-") as ckpt, scoped_conf(spark, _STREAM_CONF):
         query = (
             regs.writeStream.format("memory")
             .queryName(sink)
@@ -904,7 +894,7 @@ def st10_stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     sink = f"st10_sink_{uuid.uuid4().hex[:8]}"
-    with _scratch_dir(prefix="st10-ckpt-") as ckpt, _stream_shuffle(spark):
+    with _scratch_dir(prefix="st10-ckpt-") as ckpt, scoped_conf(spark, _STREAM_CONF):
         query = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -991,7 +981,7 @@ def st11_stream_countsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("sgn").cast("bigint").alias("c")
     )
     sink = f"st11_sink_{uuid.uuid4().hex[:8]}"
-    with _scratch_dir(prefix="st11-ckpt-") as ckpt, _stream_shuffle(spark):
+    with _scratch_dir(prefix="st11-ckpt-") as ckpt, scoped_conf(spark, _STREAM_CONF):
         query = (
             sketch.writeStream.format("memory")
             .queryName(sink)
@@ -1075,7 +1065,7 @@ def st12_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"st12_sink_{uuid.uuid4().hex[:8]}"
     with _scratch_dir(prefix="st12-ckpt-") as ckpt, \
-            _stream_shuffle(spark):
+            scoped_conf(spark, _STREAM_CONF):
         query = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -1167,7 +1157,7 @@ def st13_stream_admission_ledger(
     )
     sink = f"st13_sink_{uuid.uuid4().hex[:8]}"
     with _scratch_dir(prefix="st13-ckpt-") as ckpt, \
-            _stream_shuffle(spark):
+            scoped_conf(spark, _STREAM_CONF):
         query = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -1235,7 +1225,7 @@ def st14_stream_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"st14_sink_{uuid.uuid4().hex[:8]}"
     with _scratch_dir(prefix="st14-ckpt-") as ckpt, \
-            _stream_shuffle(spark):
+            scoped_conf(spark, _STREAM_CONF):
         query = (
             agg.writeStream.format("memory")
             .queryName(sink)

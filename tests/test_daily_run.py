@@ -2,9 +2,11 @@
 gold scoring and the day's Spark job budget.
 
 - a daily run stays inside its Spark job budget, and reading a table
-  whose ``_meta`` records a schema launches no job (a ``_meta`` without
-  one still reads, through inference); nor does reading a watermark's
-  rows in the driver;
+  (its schema is recorded in the table directory) launches no job; nor
+  does reading a watermark's rows in the driver, nor a merge that is
+  not asked for a partition plan;
+- a failure while the schema is recorded leaves the previous table
+  readable, with its old rows and schema;
 - the checks are kept: a projection that drops a row raises before
   anything is written, and an append whose schema differs from the
   recorded one raises;
@@ -12,7 +14,8 @@ gold scoring and the day's Spark job budget.
   same silver tables as a clean run;
 - the gold text cleaning equals the reference regex chain, the stopword
   removal (array_except) equals the per-token filter it replaced, and
-  gold scoring keeps exactly the rows a Filter keeps.
+  gold scoring keeps exactly the rows a Filter keeps, dropping an
+  article with no scorable word instead of failing.
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ from __future__ import annotations
 import dataclasses
 import json
 import uuid
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -81,8 +85,9 @@ def test_read_with_recorded_schema_launches_no_job(spark, tmp_path):
         [("a", 1, "2023-04-01"), ("b", 2, "2023-04-02")], ["id", "n", "day"]
     ).withColumn("day", F.to_date("day"))
     catalog.overwrite("silver", "t", df, partition_by=["day"])
-    meta_path = catalog.path("silver", "t").parent / "_meta" / "t.json"
+    meta_path = catalog.path("silver", "t") / "_catalog_meta.json"
     assert "schema" in json.loads(meta_path.read_text())
+    assert not (catalog.path("silver", "t").parent / "_meta").exists()
 
     back, jobs = _jobs(spark, lambda: catalog.read("silver", "t"))
     assert jobs == 0
@@ -90,14 +95,46 @@ def test_read_with_recorded_schema_launches_no_job(spark, tmp_path):
     want = sorted(map(tuple, df.collect()))
     assert sorted(map(tuple, back.collect())) == want
 
-    # a _meta written before schemas were recorded: inference fallback,
-    # still in the logical column order
-    meta = json.loads(meta_path.read_text())
-    del meta["schema"]
-    meta_path.write_text(json.dumps(meta))
-    legacy = catalog.read("silver", "t")
-    assert legacy.columns == ["id", "n", "day"]
-    assert sorted(map(tuple, legacy.collect())) == want
+
+def test_failure_while_recording_schema_keeps_previous_table(spark, tmp_path, monkeypatch):
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    old = spark.createDataFrame([("a", 1), ("b", 2)], ["id", "n"])
+    catalog.overwrite("silver", "t", old)
+    new = spark.createDataFrame([("c", 3, "x")], ["id", "n", "note"])
+
+    def fail(self, *args, **kwargs):
+        raise OSError("injected failure while recording the schema")
+
+    monkeypatch.setattr(Path, "write_text", fail)
+    with pytest.raises(OSError, match="injected failure"):
+        catalog.overwrite("silver", "t", new)
+    monkeypatch.undo()
+
+    back = catalog.read("silver", "t")
+    assert back.schema.simpleString() == "struct<id:string,n:bigint>"
+    assert sorted(map(tuple, back.collect())) == [("a", 1), ("b", 2)]
+    assert catalog.list_tables("silver") == ["t"]
+    assert [p.name for p in catalog.path("silver", "t").parent.iterdir()] == ["t"]
+
+
+def test_append_to_a_missing_table_raises(spark, tmp_path):
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    with pytest.raises(FileNotFoundError, match="silver.t"):
+        catalog.append("silver", "t", spark.createDataFrame([("a", 1)], ["id", "n"]))
+    assert not catalog.path("silver", "t").exists()
+
+
+def test_merge_without_partition_plan_launches_no_job(spark):
+    tgt = spark.createDataFrame([("a", 1), ("b", 1)], ["id", "version"])
+    src = spark.createDataFrame([("b", 2), ("c", 1)], ["id", "version"])
+    res, jobs = _jobs(
+        spark,
+        lambda: inc.merge_upsert(tgt, src, key="id", update_when=F.expr("src.version > tgt.version")),
+    )
+    assert jobs == 0
+    assert (res.inserted, res.updated, res.touched_partitions) == (-1, -1, None)
+    assert sorted(map(tuple, res.df.collect())) == [("a", 1), ("b", 2), ("c", 1)]
+    res.cleanup()
 
 
 def test_read_rows_launches_no_job_and_matches_read(spark, tmp_path):
@@ -224,7 +261,7 @@ def test_clean_text_equals_the_reference_chain(spark):
 def test_gold_scoring_keeps_the_rows_a_filter_keeps(spark, tmp_path):
     catalog = Catalog(spark, str(tmp_path / "wh"))
     # every text keeps a token (an all-stopword text divides by zero
-    # words, in the old plan as in the new one)
+    # words in the Filter plan compared against)
     texts = {
         "nyt": ["solar batteries and clean energy", "nothing to see here"],
         "ggl": ["lithium ion battery technology", "the cats of the hills"],
@@ -253,3 +290,25 @@ def test_gold_scoring_keeps_the_rows_a_filter_keeps(spark, tmp_path):
     )
     assert got == sorted(map(tuple, want.collect()), key=repr)
     assert {r[1] for r in got} == {"nyt0", "ggl0", "arx0"}
+
+
+def test_gold_scoring_drops_articles_without_scorable_words(spark, tmp_path):
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    # empty, NULL and stopword-only texts have no word left to divide
+    # by; they are dropped like any article scoring 0, next to one that
+    # scores
+    texts = {
+        "nyt": ["", "the and of"],
+        "ggl": [None, "solar battery technology"],
+        "arx": ["to be or not to be"],
+    }
+    for (table, _sk, _cols, _date), src in zip(gold._WORD_SOURCES.values(), texts):
+        rows = [(src, f"{src}{i}", t, None) for i, t in enumerate(texts[src])]
+        df = spark.createDataFrame(
+            rows, "source string, source_sk string, words string, publish_dt date"
+        )
+        catalog.overwrite("gold", f"{table}_words", df)
+    assert gold.gold_scoring(spark, catalog) == 1
+    (row,) = catalog.read("gold", "scored_articles").collect()
+    assert (row["source_sk"], row["unique_words"]) == ("ggl1", 3)
+    assert row["article_score"] == row["article_raw_score"] / 3

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from hypothesis import given
 from hypothesis import strategies as st
 
@@ -26,6 +27,13 @@ def test_format_run_date_shape(run_date, sep):
     assert len(out) == 10
     assert out[4] == sep and out[7] == sep
     assert out.replace(sep, "") == run_date
+
+
+@pytest.mark.parametrize("bad", ["2023041", "202304011", "2023-04-01", "2023O401", "", "２０２３０４０１"])
+def test_format_run_date_rejects_malformed(bad):
+    # a ValueError, not an assert: python -O must not strip the check
+    with pytest.raises(ValueError, match="YYYYMMDD"):
+        format_run_date(bad, "-")
 
 
 @given(

@@ -45,3 +45,15 @@ def test_stream_silver_exactly_once(spark, env):
     tbl3 = catalog.read("silver", "arxiv_stream")
     assert tbl3.count() == 12  # 3 more new ids on day 3
     assert tbl3.select("id").distinct().count() == 12
+
+
+def test_stream_silver_merge_releases_its_cache(spark, env):
+    landing, ckpt, catalog = env
+    sources.fetch_arxiv("20230401", landing, epoch=1000)
+    stream_silver_arxiv(spark, catalog, f"{landing}/arxiv", ckpt)  # creates the table
+    spark.catalog.clearCache()
+    sources.fetch_arxiv("20230402", landing, epoch=2000)
+    stream_silver_arxiv(spark, catalog, f"{landing}/arxiv", ckpt)  # merges
+    assert catalog.read("silver", "arxiv_stream").count() == 9
+    # the micro-batch's persisted merge changes were released
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
