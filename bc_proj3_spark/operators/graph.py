@@ -351,25 +351,33 @@ def _pr_halfup(a: str, b: str) -> str:
 
 
 def _pr_oracle() -> str:
+    """DuckDB oracle for cc3: the d4 near-dup pairs, the undirected
+    edge list and degrees, then PR_ITERS unrolled rank steps
+    contrib{k}/r{k} in the same integer lattice as the Spark loop.
+    Every step is MATERIALIZED so DuckDB evaluates the embedded d4
+    pairs query once, not once per reference along the round chain
+    (g6/g11 discipline; inlined, the sf0.1 oracle spills until the
+    disk is full). Each step is deterministic, so materializing
+    changes only the evaluation, never the rows."""
     from bc_proj3_spark.operators.dedup import _D4_ORACLE
 
     ctes = [
         f"""
-pairs AS (
+pairs AS MATERIALIZED (
 {_D4_ORACLE}
 ),
-edges AS (
+edges AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
   UNION ALL
   SELECT doc_b, doc_a FROM pairs
 ),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-nn AS (SELECT COUNT(*) AS n FROM nodes),
-deg AS (SELECT src AS node, COUNT(*) AS d FROM edges GROUP BY src),
-base AS (
+nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges),
+nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM nodes),
+deg AS MATERIALIZED (SELECT src AS node, COUNT(*) AS d FROM edges GROUP BY src),
+base AS MATERIALIZED (
   SELECT {_pr_halfup(f"{15 * 10 ** 10}", "(SELECT n FROM nn)")} AS b
 ),
-r0 AS (
+r0 AS MATERIALIZED (
   SELECT node,
          {_pr_halfup(str(PR_SCALE), "(SELECT n FROM nn)")} AS r
   FROM nodes
@@ -379,7 +387,7 @@ r0 AS (
         p = k - 1
         ctes.append(
             f"""
-contrib{k} AS (
+contrib{k} AS MATERIALIZED (
   SELECT e.dst AS node,
          SUM({_pr_halfup(f"r{p}.r", "deg.d")}) AS s
   FROM edges e
@@ -387,7 +395,7 @@ contrib{k} AS (
   JOIN deg ON e.src = deg.node
   GROUP BY e.dst
 ),
-r{k} AS (
+r{k} AS MATERIALIZED (
   SELECT nodes.node,
          CAST((SELECT b FROM base)
               + {_pr_halfup(f"{PR_DAMP_NUM} * COALESCE(contrib{k}.s, 0)", str(PR_DAMP_DEN))}

@@ -137,11 +137,13 @@ SF01_QUERIES = [
 def sf01_con():
     con = duckdb.connect()
     # Cap DuckDB's thread count for the sf0.1 oracles: at the default
-    # (one per host core, 32 here) the d4-CTE-embedding graph oracles
+    # (one per host core) the d4-CTE-embedding graph oracles
     # (cc3/g6/g11/...) thread-partition their materialized CTEs into
-    # tens of GB of .tmp spill and run for an hour; at 8 threads the
-    # same cc3 oracle finishes in ~3 min fully in memory (measured
-    # r10: 162 s / 0 spill at 6 threads vs >60 min / 58 GB at 32).
+    # tens of GB of .tmp spill and run for an hour (measured r10 on a
+    # 32-core host: >60 min / 58 GB at 32 threads vs 162 s / 0 spill
+    # at 6, for cc3 before its CTEs were MATERIALIZED). With every
+    # step MATERIALIZED, cc3's oracle takes ~2.5 s at 8 threads on a
+    # 4-core host.
     con.execute("SET threads=8")
     for name in TABLE_NAMES:
         path = f"{SF01_DIR}/{name}.parquet"
