@@ -308,13 +308,55 @@ print("PARITY_JSON:" + json.dumps(out))
 """
 
 
-#: Number of concurrent parity subprocesses. Each chunk gets its OWN
-#: fresh vanilla JVM (same posture per query as the single-process
-#: form — sessions are process-isolated, so no shared-cache interaction
-#: between chunks), and the ~170-query replay that took ~250 s
-#: sequentially overlaps across processes (r11; the suite must fit the
-#: external verifier's pytest window — VERIFY_r10 tests_ok).
-_PARITY_PROCS = 4
+#: Most concurrent parity subprocesses. Each chunk gets its OWN fresh
+#: vanilla JVM (same posture per query as the single-process form —
+#: sessions are process-isolated, so no shared-cache interaction
+#: between chunks), and the ~170-query replay overlaps across
+#: processes (the suite must fit the external verifier's pytest
+#: window — VERIFY_r10 tests_ok). The replay is CPU-bound: on a 4-core
+#: host it takes ~404 s in one JVM and ~356 s in two (~95 % busy).
+_PARITY_PROCS_MAX = 4
+
+#: Memory one parity JVM is given room for: a bare local[8] driver
+#: (default 1g heap) reaches ~1.6 GB RSS by the end of its chunk
+#: (measured on a 4-core, 16 GB host).
+_PARITY_PROC_MB = 2048
+
+#: Memory left to the pytest process (DuckDB oracles) and the suite's
+#: own session JVM while the parity JVMs run.
+_PARITY_RESERVE_MB = 2048
+
+
+def _mem_available_mb() -> int:
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemAvailable:"):
+                return int(line.split()[1]) // 1024
+    return 0
+
+
+def _release_session_heap() -> None:
+    """Let the suite's session JVM, if one runs, return its free heap.
+
+    Its heap grows to ~8 GB RSS over test_correctness and G1 keeps it
+    committed; a full GC shrinks it. On a 16 GB host, four parity JVMs
+    beside the unshrunk session filled memory and the suite thrashed
+    until its time limit."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        sc._jvm.java.lang.System.gc()
+
+
+def _parity_procs() -> int:
+    """Concurrent parity JVMs: at most one per two of the suite's cores
+    (each is a local[8] driver) and as many as the host's available
+    memory holds, never fewer than one."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    n_cpus = int(cpus) if cpus.isdigit() else (os.cpu_count() or 1)
+    by_mem = (_mem_available_mb() - _PARITY_RESERVE_MB) // _PARITY_PROC_MB
+    return max(1, min(_PARITY_PROCS_MAX, n_cpus // 2, by_mem))
 
 
 def _run_parity_chunk(names, env):
@@ -353,9 +395,11 @@ def parity_counts():
     all_names = PARITY_QUERIES + [
         n for n in STRICT_VALUE_QUERIES if n not in PARITY_QUERIES
     ]
-    chunks = [all_names[i::_PARITY_PROCS] for i in range(_PARITY_PROCS)]
+    _release_session_heap()
+    procs = _parity_procs()
+    chunks = [all_names[i::procs] for i in range(procs)]
     payload: dict = {}
-    with ThreadPoolExecutor(max_workers=_PARITY_PROCS) as pool:
+    with ThreadPoolExecutor(max_workers=procs) as pool:
         for part in pool.map(lambda c: _run_parity_chunk(c, env), chunks):
             payload.update(part)
     return payload
