@@ -4,10 +4,11 @@ Several registered queries' results are, in production, persisted
 tables that downstream stages read (the near-dup pair list the graph
 jobs consume, the dedup survivor set the corpus build reads, the
 quality-filter decision and the ingest-dedup admitted list the
-manifest/streaming ledgers join against). bench.py's per-query
-clearCache would force every consumer to re-run the full producing
-funnel; under the ``SPARK_GRAFT_INDEX_SPILL_DIR`` seam the OWNER query
-publishes its result write-once as parquet and consumers restore it.
+manifest/streaming ledgers join against). perfbench's query_mix
+clears the cache after every query, which would force every consumer
+to re-run the full producing funnel; under the
+``SPARK_GRAFT_INDEX_SPILL_DIR`` seam the OWNER query publishes its
+result write-once as parquet and consumers restore it.
 
 Owner rule (r9 verdict): a registered query never restores its OWN
 result — owners always compute, so their bench rows measure the

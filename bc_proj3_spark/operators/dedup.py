@@ -256,9 +256,10 @@ def _shingle_pairs(
 #: keyed by (applicationId, sf_dir). d3 and d4 build byte-identical
 #: indexes; the correctness driver runs the whole registry on one
 #: session, so sharing saves a full index build per query. Entries
-#: whose cache was evicted (bench.py clearCache between queries, or
-#: executor pressure) are rebuilt transparently. d6's survivor-scoped
-#: index is per-call and NOT cached here (different source relation).
+#: whose cache was evicted (perfbench's query_mix clears the cache
+#: between queries, or executor pressure) are rebuilt transparently.
+#: d6's survivor-scoped index is per-call and NOT cached here
+#: (different source relation).
 _DOC_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 
 
@@ -276,10 +277,10 @@ def _documents_shingle_index(
     once per (spill dir, sf_dir) as the ``shingle_index`` artifact, and
     a cache-evicted entry is restored by re-reading it instead of
     re-running the explode→md5 build — a local columnar scan of a few
-    MB vs ~1.5 s of regex+hash CPU at sf0.1. bench.py sets a fresh
-    temp dir per run (its per-query clearCache evicts the blocks
-    between each of the ~15 index consumers, so without the seam each
-    one rebuilds from scratch); this is the write-once derived-index
+    MB vs ~1.5 s of regex+hash CPU at sf0.1. perfbench's query_mix
+    sets a fresh dir per round (its per-query clearCache evicts the
+    blocks between index consumers, so without the seam each one
+    rebuilds from scratch); this is the write-once derived-index
     pattern a warehouse would use — at 100 TB the index is a bucketed
     table, not a per-query recompute. The restore bypasses the
     consumer memo (``_ARTIFACT_CACHE``): this cache is the index's

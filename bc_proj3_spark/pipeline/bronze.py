@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bc_proj3_spark.catalog import Catalog
-from bc_proj3_spark.session import scoped_conf
+from bc_proj3_spark.session import apply_runtime_conf
 
 
 def _audit(df: DataFrame, file_path: str, run_date: str) -> DataFrame:
@@ -49,14 +49,17 @@ def bronze_nyt(
 ) -> int:
     """_airbyte_data.* unnest, multimedia dropped under case-sensitive
     resolution (bronze_ny_times.py:2,61-80 — the reference sets
-    caseSensitive cluster-wide; here it is scoped to this read and
-    restored, per SURVEY.md §7.4.6)."""
-    with scoped_conf(spark, {"spark.sql.caseSensitive": "true"}):
-        raw = spark.read.json(file_path)
-        flat = raw.select("_airbyte_data.*")
-        keep = [c for c in flat.columns if c != "multimedia"]
-        out = _audit(flat.select(*keep), file_path, run_date)
-        return catalog.overwrite("bronze", "nytarchive", out)
+    caseSensitive cluster-wide). Here it is set on a child session
+    (``newSession``: same SparkContext, its own SQL confs) that reads,
+    analyzes and writes this table only, so the other sources' stages
+    running beside it keep the shared session's resolution (SURVEY.md
+    §7.4.6)."""
+    nyt = apply_runtime_conf(spark.newSession())
+    nyt.conf.set("spark.sql.caseSensitive", "true")
+    flat = nyt.read.json(file_path).select("_airbyte_data.*")
+    keep = [c for c in flat.columns if c != "multimedia"]
+    out = _audit(flat.select(*keep), file_path, run_date)
+    return catalog.overwrite("bronze", "nytarchive", out)
 
 
 def bronze_scholar(

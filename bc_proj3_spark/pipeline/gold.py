@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bc_proj3_spark.catalog import Catalog
+from bc_proj3_spark.session import run_concurrently
 
 # Reference scoring config (gold_article_scoring.py:104-136), weights from
 # the public glossaries cited there.
@@ -160,19 +161,23 @@ _WORD_SOURCES = {
 
 
 def gold_words(spark: SparkSession, catalog: Catalog, fresh: bool = False) -> dict:
-    """Three <src>_words tables (gold_integrated_data_preNLP.py:48-138)."""
-    counts = {}
-    for src, (table, sk, text_cols, date_col) in _WORD_SOURCES.items():
+    """Three <src>_words tables (gold_integrated_data_preNLP.py:48-138),
+    written side by side, one thread per source."""
+
+    def words(src: str) -> int:
+        table, sk, text_cols, date_col = _WORD_SOURCES[src]
         if fresh:
             catalog.drop("gold", f"{table}_words")
-        words = catalog.read("silver", table).selectExpr(
+        df = catalog.read("silver", table).selectExpr(
             f"'{src}' AS source",
             f"{sk} AS source_sk",
             f"lower(concat_ws(' ', {', '.join(text_cols)})) AS words",
             f"{date_col} AS publish_dt",
         )
-        counts[src] = catalog.overwrite("gold", f"{table}_words", words)
-    return counts
+        return catalog.overwrite("gold", f"{table}_words", df)
+
+    counts = run_concurrently(spark, [functools.partial(words, s) for s in _WORD_SOURCES])
+    return dict(zip(_WORD_SOURCES, counts))
 
 
 def combined_pre_nlp(spark: SparkSession, catalog: Catalog) -> DataFrame:

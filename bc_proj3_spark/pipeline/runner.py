@@ -1,10 +1,32 @@
 """Pipeline runner: thread run_date through bronze → silver → gold.
 
-The library form of the reference's control plane (SURVEY.md §2.12):
-the Airflow DAG's fan-in (cleantech.py:76-79) becomes a staged
-sequence; the templated run date (D3) is an explicit parameter; the
-no-files notebook exit (D4) becomes a SKIPPED stage result; precondition
+The library form of the reference's control plane (SURVEY.md §2.12).
+The Airflow DAG runs its three sources side by side and fans in only
+before the Databricks job (``[scholar, arxiv, nyt_update >> nyt_sync]
+>> databricks``, cleantech.py:76-79). A day here has the same shape on
+one SparkContext:
+
+- **fan-out**: each source's chain — landing pick and bronze, then its
+  silver load — runs on its own thread, the three chains at once;
+- **words**: once every chain is done, ``gold_words`` builds the three
+  per-source words tables, again one thread per source;
+- **fan-in**: ``gold_scoring`` scores the union of the words tables;
+- ``maintenance`` (when asked) runs after gold, alone.
+
+Spark schedules the chains' jobs side by side, so one chain's driver
+work (planning, py4j calls, file renames) overlaps another's tasks.
+Every stage's Spark jobs carry the caller's job group.
+
+The templated run date (D3) is an explicit parameter; the no-files
+notebook exit (D4) becomes a SKIPPED stage result; precondition
 violations (D5) raise; is_fresh_load (D6) is the ``fresh`` flag.
+
+On a failure in one chain the other chains still run to their end, and
+each of their writes commits whole, table by table (a write stages its
+files and then swaps them in).
+The first failure in source order (arXiv, NYT, Scholar) is then
+raised, and no gold stage runs. Re-running the day is safe, because
+every stage is idempotent (below).
 
 Skip semantics match the reference's behavior: a bronze stage with no
 landing file for the run date leaves the *previous* bronze batch in
@@ -17,7 +39,10 @@ SURVEY.md §7.4.7) and is pinned by tests/test_pipeline.py.
 from __future__ import annotations
 
 import functools
+import os
+import time
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -26,6 +51,7 @@ from bc_proj3_spark.io import landing
 from bc_proj3_spark.pipeline import bronze as bz
 from bc_proj3_spark.pipeline import gold as gd
 from bc_proj3_spark.pipeline import silver as sv
+from bc_proj3_spark.session import run_concurrently
 
 SKIPPED = "SKIPPED"
 LOADED = "LOADED"
@@ -37,6 +63,10 @@ class StageResult:
     status: str
     rows: int = 0
     metrics: dict = field(default_factory=dict)
+    #: wall-clock start (epoch seconds) and duration of the stage; not
+    #: compared, so equal loads give equal results
+    started: float = field(default=0.0, compare=False)
+    seconds: float = field(default=0.0, compare=False)
 
 
 _BRONZE = (
@@ -55,6 +85,13 @@ _SILVER = tuple(
 )
 
 
+def _timed(name: str, run: Callable[[], tuple[str, int, dict]]) -> StageResult:
+    """Run one stage and stamp its start and wall time."""
+    started, t0 = time.time(), time.perf_counter()
+    status, rows, metrics = run()
+    return StageResult(name, status, rows, metrics, started, time.perf_counter() - t0)
+
+
 def run_pipeline(
     spark: SparkSession,
     catalog: Catalog,
@@ -63,62 +100,71 @@ def run_pipeline(
     fresh: bool = False,
     maintenance: bool = False,
 ) -> dict[str, StageResult]:
-    """One daily run. Returns per-stage results keyed by stage name.
+    """One daily run. Returns per-stage results keyed by stage name:
+    bronze ×3, silver ×3, gold_words, gold_scoring, then maintenance.
 
     ``maintenance``: after the load, compact silver tables fragmented by
     the day's incremental appends and vacuum orphaned staging dirs —
     the OPTIMIZE/VACUUM step a production daily DAG schedules alongside
     the load (the reference gets it from Databricks table maintenance).
     Off by default: tests and ad-hoc runs shouldn't churn files."""
-    results: dict[str, StageResult] = {}
 
-    import os
+    def chain(bronze: tuple, silver: tuple) -> tuple[StageResult, StageResult]:
+        b_name, subdir, sep, b_fn = bronze
+        s_name, table, s_fn = silver
 
-    for name, subdir, sep, fn in _BRONZE:
-        try:
-            batch = landing.select_batch_file(
-                run_date, os.path.join(landing_dir, subdir), sep
-            )
-        except landing.NoFilesForRunDate:
-            results[name] = StageResult(name, SKIPPED)
-            continue
-        rows = fn(spark, catalog, batch, run_date)
-        results[name] = StageResult(name, LOADED, rows=rows)
+        def load_bronze():
+            try:
+                batch = landing.select_batch_file(
+                    run_date, os.path.join(landing_dir, subdir), sep
+                )
+            except landing.NoFilesForRunDate:
+                return SKIPPED, 0, {}
+            return LOADED, b_fn(spark, catalog, batch, run_date), {}
 
-    for name, table, fn in _SILVER:
-        if not catalog.exists("bronze", table):
-            results[name] = StageResult(name, SKIPPED)
-            continue
-        metrics = fn(spark, catalog, fresh=fresh)
-        results[name] = StageResult(
-            name, LOADED, rows=metrics.pop("rows"), metrics=metrics
-        )
+        def load_silver():
+            if not catalog.exists("bronze", table):
+                return SKIPPED, 0, {}
+            metrics = s_fn(spark, catalog, fresh=fresh)
+            return LOADED, metrics.pop("rows"), metrics
+
+        return _timed(b_name, load_bronze), _timed(s_name, load_silver)
+
+    chains = run_concurrently(
+        spark, [functools.partial(chain, b, s) for b, s in zip(_BRONZE, _SILVER)]
+    )
+    bronze, silver = zip(*chains)
+    results = {r.name: r for r in (*bronze, *silver)}
 
     silver_ready = all(catalog.exists("silver", t) for _, t, _ in _SILVER)
-    if silver_ready:
+
+    def words():
+        if not silver_ready:
+            return SKIPPED, 0, {}
         counts = gd.gold_words(spark, catalog, fresh=fresh)
-        results["gold_words"] = StageResult(
-            "gold_words", LOADED, rows=sum(counts.values()), metrics=counts
-        )
-        scored = gd.gold_scoring(spark, catalog)
-        results["gold_scoring"] = StageResult("gold_scoring", LOADED, rows=scored)
-    else:
-        results["gold_words"] = StageResult("gold_words", SKIPPED)
-        results["gold_scoring"] = StageResult("gold_scoring", SKIPPED)
+        return LOADED, sum(counts.values()), counts
+
+    def scoring():
+        if not silver_ready:
+            return SKIPPED, 0, {}
+        return LOADED, gd.gold_scoring(spark, catalog), {}
+
+    results["gold_words"] = _timed("gold_words", words)
+    results["gold_scoring"] = _timed("gold_scoring", scoring)
 
     if maintenance:
-        compacted: dict[str, int] = {}
-        for _, table, _fn in _SILVER:
-            if catalog.exists("silver", table):
-                done = catalog.compact("silver", table)
-                if done:
-                    compacted[table] = sum(b - a for b, a in done.values())
-        vacuumed = sum(len(catalog.vacuum(layer)) for layer in ("bronze", "silver", "gold"))
-        results["maintenance"] = StageResult(
-            "maintenance", LOADED,
-            metrics={"files_reclaimed": sum(compacted.values()),
-                     "tmp_dirs_vacuumed": vacuumed, **compacted},
-        )
+        def maintain():
+            compacted: dict[str, int] = {}
+            for _, table, _fn in _SILVER:
+                if catalog.exists("silver", table):
+                    done = catalog.compact("silver", table)
+                    if done:
+                        compacted[table] = sum(b - a for b, a in done.values())
+            vacuumed = sum(len(catalog.vacuum(layer)) for layer in ("bronze", "silver", "gold"))
+            return LOADED, 0, {"files_reclaimed": sum(compacted.values()),
+                               "tmp_dirs_vacuumed": vacuumed, **compacted}
+
+        results["maintenance"] = _timed("maintenance", maintain)
 
     return results
 
@@ -155,8 +201,10 @@ def main(argv: list[str] | None = None) -> int:
         spark, catalog, args.landing, args.run_date,
         fresh=args.fresh, maintenance=args.maintenance,
     )
+    t0 = min(r.started for r in results.values())
     for r in results.values():
-        print(f"{r.name:16s} {r.status:8s} rows={r.rows} {r.metrics or ''}")
+        print(f"{r.name:16s} {r.status:8s} start=+{r.started - t0:.2f}s "
+              f"wall={r.seconds:.2f}s rows={r.rows} {r.metrics or ''}")
     return 0
 
 

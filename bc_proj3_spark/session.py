@@ -17,10 +17,18 @@ from __future__ import annotations
 
 import contextlib
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Sequence, TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark", "apply_runtime_conf", "scoped_conf"]
+__all__ = [
+    "get_spark", "stop_spark", "apply_runtime_conf", "scoped_conf", "run_concurrently",
+    "default_driver_memory",
+]
+
+T = TypeVar("T")
 
 #: SQL confs that are safe to set on an already-running session and that
 #: the engine's plans depend on. The correctness driver hands us *its*
@@ -90,6 +98,43 @@ def scoped_conf(spark: SparkSession, conf: dict[str, str]):
             spark.conf.set(k, v)
 
 
+def run_concurrently(spark: SparkSession, tasks: Sequence[Callable[[], T]]) -> list[T]:
+    """Run each task on its own thread over ``spark``'s one SparkContext
+    and return their results in ``tasks`` order.
+
+    A task's Spark jobs carry the caller's job group, description and
+    other local properties. Each task is wrapped on its own, because
+    ``inheritable_thread_target`` clones the properties once per wrap
+    and every thread it starts shares that clone: a property one task
+    sets is then not seen by the others. Every task runs to its end,
+    and the pool's threads are joined, before this returns or raises; a
+    failure is re-raised only then, the first one in ``tasks`` order,
+    with a note naming each later one. Tasks must not change the
+    session's confs (a conf set by one is seen by all)."""
+    with ThreadPoolExecutor(max(len(tasks), 1), thread_name_prefix="spark-task") as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(task)) for task in tasks]
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        for later in errors[1:]:
+            errors[0].add_note(f"a concurrent task also failed: {later!r}")
+        raise errors[0]
+    return [f.result() for f in futures]
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    min(24g, 60 % of the host's MemTotal), or 24g when MemTotal cannot
+    be read. 24g on a small host lets the session JVM grow past what the
+    host can hold beside the Python workers."""
+    try:
+        with open(meminfo, encoding="ascii") as fh:
+            total_kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, ValueError, IndexError, StopIteration):
+        return "24g"
+    mb = total_kb * 6 // 10 // 1024
+    return f"{mb}m" if mb < 24 * 1024 else "24g"
+
+
 def get_spark(
     app_name: str = "bc_proj3_spark",
     master: str | None = None,
@@ -121,7 +166,10 @@ def get_spark(
         # NOTE: spark.driver.memory only takes effect on a cold JVM start
         # (spark-submit / first getOrCreate in-process); it is a no-op on
         # an already-running JVM. Prefer SPARK_DRIVER_MEMORY in the env.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in _RUNTIME_CONF.items():

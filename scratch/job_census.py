@@ -3,8 +3,8 @@
 Usage: python scratch/job_census.py <name> [warm_runs]
 Runs the query once (plus optional warm run), then prints every Spark
 job with duration, description and stage/task counts from the JVM
-status store. Seam env set like bench.py so the shared-index path
-matches the bench posture.
+status store. The SPARK_GRAFT_INDEX_SPILL_DIR seam is set as perfbench's
+query_mix sets it, so the shared-index path matches the bench posture.
 """
 import os
 import sys

@@ -1,8 +1,8 @@
-"""Min-of-N timing for a subset of registered queries (bench.py method).
+"""Min-of-N timing for a subset of registered queries.
 
 Usage: python scratch/time_subset.py name1,name2,... [n_runs] [label]
-Mirrors bench.py: noop sink, clearCache between runs, warmup query,
-SPARK_GRAFT_INDEX_SPILL_DIR seam like bench. Prints one line per query
+Noop sink, clearCache between runs, a warmup query, and the
+SPARK_GRAFT_INDEX_SPILL_DIR seam (docs/benching.md). Prints one line per query
 and a JSON map at the end.
 """
 import json

@@ -1,7 +1,8 @@
 """The daily run: the one silver loader, the schema-carrying catalog,
 gold scoring and the day's Spark job budget.
 
-- a daily run stays inside its Spark job budget, and reading a table
+- a daily run launches exactly its Spark job budget (the jobs of its
+  concurrent chains carry the caller's job group), and reading a table
   (its schema is recorded in the table directory) launches no job; nor
   does reading a watermark's rows in the driver, nor a merge that is
   not asked for a partition plan;
@@ -39,7 +40,8 @@ RUN1, RUN2 = "20230401", "20230402"
 
 #: Spark jobs of one incremental day on the fetch_all fixtures: bronze 6
 #: (a JSON scan and a write per source), silver 13 (arXiv 6, NYT 3,
-#: Scholar 4), gold 4 (one write per table).
+#: Scholar 4), gold 4 (one write per table). The count repeats exactly;
+#: fewer means jobs escaped the caller's job group.
 DAY_JOB_BUDGET = 23
 
 SILVER = ("arxiv", "nytarchive", "googlescholar")
@@ -76,7 +78,7 @@ def test_incremental_day_stays_inside_job_budget(spark, tmp_path, landing):
     run_pipeline(spark, catalog, landing, RUN1)
     res, jobs = _jobs(spark, lambda: run_pipeline(spark, catalog, landing, RUN2))
     assert all(r.status == "LOADED" for r in res.values()), res
-    assert jobs <= DAY_JOB_BUDGET, f"{jobs} Spark jobs, budget {DAY_JOB_BUDGET}"
+    assert jobs == DAY_JOB_BUDGET, f"{jobs} Spark jobs, budget {DAY_JOB_BUDGET}"
 
 
 def test_read_with_recorded_schema_launches_no_job(spark, tmp_path):
