@@ -3,8 +3,9 @@
 The semantic core of the reference's silver layer
 (SURVEY.md §2.1 S8-S10, §3.3):
 
-- **watermark cursor**: a one-row table holding the high-water mark;
-  read-filter-update contract of silver_arxiv.py:43-50,194-199.
+- **watermark cursor**: the high-water mark, committed in the silver
+  table's own log entry with the data it covers; read-filter-update
+  contract of silver_arxiv.py:43-50,194-199.
 - **merge upsert**: ``MERGE INTO tgt USING src ON tgt.id = src.id WHEN
   MATCHED AND src.version > tgt.version THEN UPDATE SET * WHEN NOT
   MATCHED THEN INSERT *`` (silver_arxiv.py:130-152) re-expressed as a
@@ -44,15 +45,14 @@ from bc_proj3_spark.catalog import Catalog, quote_ident
 
 
 class PreconditionError(Exception):
-    """Silver table and its watermark must exist together or not at all
+    """A watermarked silver table must carry its watermark
     (silver_arxiv.py:43-49)."""
 
 
 class ValidationError(Exception):
-    """A pipeline data-integrity check failed (row-count conservation,
-    watermark write-back). Raised, not ``assert``-ed: these are the
-    pipeline's core validations and must survive ``python -O``
-    (r9 verdict)."""
+    """A pipeline data-integrity check failed (row-count conservation).
+    Raised, not ``assert``-ed: these are the pipeline's core validations
+    and must survive ``python -O`` (r9 verdict)."""
 
 
 @dataclass
@@ -82,40 +82,22 @@ class MergeResult:
 
 
 # ---------------------------------------------------------------------------
-# watermark table contract
+# watermark contract
 # ---------------------------------------------------------------------------
 
 
-def watermark_name(table: str) -> str:
-    return f"watermark_{table}"
-
-
 def resolve_watermark(catalog: Catalog, table: str) -> str | None:
-    """Initial-load cursor resolution (silver_arxiv.py:38-50): neither
-    table nor watermark → None (first load: the caller overwrites, no
-    filter); both → the stored value; mixed → ``PreconditionError``."""
-    has_table = catalog.exists("silver", table)
-    has_wm = catalog.exists("silver", watermark_name(table))
-    if not has_table and not has_wm:
+    """Initial-load cursor resolution (silver_arxiv.py:38-50), read from
+    the silver table's newest log entry, where the watermark commits with
+    the data: no table → None (first load: the caller overwrites, no
+    filter); a table whose log carries a watermark → that value; a table
+    without one → ``PreconditionError``."""
+    if not catalog.exists("silver", table):
         return None
-    if has_table and has_wm:
-        return catalog.read_rows("silver", watermark_name(table))[0]["watermark_date"]
-    raise PreconditionError(
-        f"silver.{table}: table and watermark must both exist or neither "
-        f"(table={has_table}, watermark={has_wm})"
-    )
-
-
-def write_watermark(catalog: Catalog, table: str, value: str) -> None:
-    """CREATE OR REPLACE the one-row watermark table and verify the
-    write-back (silver_arxiv.py:194-209)."""
-    # a JVM-side one-row, one-task frame: createDataFrame from Python rows
-    # would ship them through Python workers in one task per core
-    df = catalog.spark.range(0, 1, 1, 1).select(F.lit(str(value)).alias("watermark_date"))
-    catalog.overwrite("silver", watermark_name(table), df)
-    stored = catalog.read_rows("silver", watermark_name(table))[0]["watermark_date"]
-    if stored != str(value):
-        raise ValidationError(f"watermark write-back failed for {table}")
+    watermark = catalog.watermark("silver", table)
+    if watermark is None:
+        raise PreconditionError(f"silver.{table}: the table's log carries no watermark")
+    return watermark
 
 
 # ---------------------------------------------------------------------------

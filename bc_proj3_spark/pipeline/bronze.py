@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bc_proj3_spark.catalog import Catalog
 from bc_proj3_spark.session import apply_runtime_conf
@@ -38,9 +39,17 @@ def _audit(df: DataFrame, file_path: str, run_date: str) -> DataFrame:
 def bronze_arxiv(
     spark: SparkSession, catalog: Catalog, file_path: str, run_date: str
 ) -> int:
-    """feed → explode(feed.entry) → entry.* (bronze_arxiv.py:61-89)."""
+    """feed → explode(feed.entry) → entry.* (bronze_arxiv.py:61-89). A
+    feed with no entries infers ``entry`` as an array of strings; it
+    lands as an empty table of the string fields silver reads."""
     raw = spark.read.json(file_path)
-    flat = raw.select(F.explode("feed.entry").alias("results")).select("results.*")
+    entries = raw.select(F.explode("feed.entry").alias("results"))
+    if isinstance(entries.schema["results"].dataType, StructType):
+        flat = entries.select("results.*")
+    else:
+        flat = entries.selectExpr(
+            *(f"CAST(NULL AS STRING) AS {c}" for c in ("id", "updated", "title", "summary"))
+        )
     return catalog.overwrite("bronze", "arxiv", _audit(flat, file_path, run_date))
 
 

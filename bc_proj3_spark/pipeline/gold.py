@@ -197,17 +197,19 @@ def gold_scoring(spark: SparkSession, catalog: Catalog) -> int:
     """scored_articles (gold_article_scoring.py:149-175): the NLP-lite
     scoring chain over the combined view, keeping article_score > 0."""
     df = combined_pre_nlp(spark, catalog)
-    scored = (
-        df.withColumn("vector_unique", unique_lemmas(F.col("words")))
-        .withColumn("article_raw_score", score_tokens(F.col("vector_unique")))
-        .withColumn("unique_words", F.size("vector_unique"))
+    # one projection, analysed once: each column after the first reads
+    # the ones before it by their alias (lateral column aliases), where
+    # a withColumn per column would be analysed eagerly one by one
+    scored = df.select(
+        "*",
+        unique_lemmas(F.col("words")).alias("vector_unique"),
+        score_tokens(F.col("vector_unique")).alias("article_raw_score"),
+        F.size("vector_unique").alias("unique_words"),
         # an article with no scorable word (empty or only stopwords) has
         # unique_words = 0: try_divide gives NULL, which the > 0 filter
         # below drops, as the reference's non-ANSI divide then filter does
-        .withColumn(
-            "article_score",
-            F.try_divide(F.lit(1.0) * F.col("article_raw_score"), F.col("unique_words")),
-        )
+        F.try_divide(F.lit(1.0) * F.col("article_raw_score"), F.col("unique_words"))
+        .alias("article_score"),
     )
     cols = ("source", "source_sk", "publish_dt", "words",
             "article_raw_score", "unique_words", "article_score")

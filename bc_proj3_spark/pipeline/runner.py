@@ -22,8 +22,10 @@ notebook exit (D4) becomes a SKIPPED stage result; precondition
 violations (D5) raise; is_fresh_load (D6) is the ``fresh`` flag.
 
 On a failure in one chain the other chains still run to their end, and
-each of their writes commits whole, table by table (a write stages its
-files and then swaps them in).
+each of their writes commits whole, table by table: a write is one entry
+in its table's catalog log, which holds its files and, on silver, the
+watermark (catalog.py). A failure at any step of a write leaves the
+table's previous entry in force.
 The first failure in source order (arXiv, NYT, Scholar) is then
 raised, and no gold stage runs. Re-running the day is safe, because
 every stage is idempotent (below).
@@ -104,7 +106,8 @@ def run_pipeline(
     bronze ×3, silver ×3, gold_words, gold_scoring, then maintenance.
 
     ``maintenance``: after the load, compact silver tables fragmented by
-    the day's incremental appends and vacuum orphaned staging dirs —
+    the day's incremental appends and vacuum what no log entry names
+    (stale staging dirs, files of failed writes) —
     the OPTIMIZE/VACUUM step a production daily DAG schedules alongside
     the load (the reference gets it from Databricks table maintenance).
     Off by default: tests and ad-hoc runs shouldn't churn files."""
@@ -162,7 +165,7 @@ def run_pipeline(
                         compacted[table] = sum(b - a for b, a in done.values())
             vacuumed = sum(len(catalog.vacuum(layer)) for layer in ("bronze", "silver", "gold"))
             return LOADED, 0, {"files_reclaimed": sum(compacted.values()),
-                               "tmp_dirs_vacuumed": vacuumed, **compacted}
+                               "paths_vacuumed": vacuumed, **compacted}
 
         results["maintenance"] = _timed("maintenance", maintain)
 
@@ -188,7 +191,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--fetch", action="store_true",
                     help="also land synthetic batches first (offline sources)")
     ap.add_argument("--maintenance", action="store_true",
-                    help="compact fragmented silver partitions + vacuum tmp dirs")
+                    help="compact fragmented silver partitions + vacuum "
+                         "stale staging dirs and files no log entry names")
     args = ap.parse_args(argv)
 
     spark = get_spark(app_name=f"pipeline-{args.run_date}")

@@ -14,7 +14,9 @@ match key, and one of three strategies mirroring the reference:
   publish_dt strictly greater than the watermark and a surrogate key
   the target lacks; watermark = max over the whole target.
 
-A table's first load is a CTAS overwrite. Row-count conservation (pre
+A table's first load is a CTAS overwrite. Each load commits its rows
+and its new watermark as one catalog log entry, so a failure at any
+step leaves both as they were. Row-count conservation (pre
 == post of the typed projection, silver_arxiv.py:64,161-166) and the
 watermark maximum are observed by the first job that reads the
 projection, before anything is written: the merge's metrics job when
@@ -28,9 +30,9 @@ Documented deviations from the reference (SURVEY.md §7.4):
   snippets and has an always-true condition, :107-117);
 - scholar's strict-> watermark drops same-day re-derived rows — kept
   verbatim for parity, and pinned by a test;
-- scholar's append also anti-joins on ggl_sk, so re-running a day whose
-  watermark write failed inserts nothing twice (in a clean run the
-  strict filter already excludes every stored key);
+- scholar's append also anti-joins on ggl_sk, as the NYT dedup does,
+  although the strict filter already excludes every stored key: the
+  watermark commits in the same log entry as the rows it covers;
 - scholar's whole-target maximum is max(stored watermark, batch
   maximum), not a target scan: ggl_sk covers publish_dt, so every batch
   row past the watermark is in the target after the append, and the
@@ -161,7 +163,6 @@ def load(
     table, wm_col = spec.table, spec.watermark_col
     if fresh:
         catalog.drop("silver", table)
-        catalog.drop("silver", inc.watermark_name(table))
     watermark = inc.resolve_watermark(catalog, table) if wm_col else None
 
     bronze = catalog.read("bronze", table)
@@ -174,13 +175,20 @@ def load(
         post_obs, *map(F.expr, aggs)
     )
 
-    def conserved() -> dict:
+    def conserved() -> tuple[int, str | None]:
+        """(rows read, the watermark this load commits; None keeps it)."""
         pre, post = int(pre_obs.get["pre"]), int(post_obs.get["post"])
         if pre != post:
             raise inc.ValidationError(
                 f"silver.{table}: rows lost in transformation ({pre}->{post})"
             )
-        return {"rows": pre, **post_obs.get}
+        if not wm_col or post_obs.get["max"] is None:
+            return pre, None
+        new_wm = str(post_obs.get["max"])
+        if spec.strategy == WATERMARK_APPEND and watermark is not None:
+            # whole-target maximum (silver_google_scholar.py:215)
+            new_wm = max(new_wm, watermark)
+        return pre, new_wm
 
     updated = 0
     exists = catalog.exists("silver", table)
@@ -193,29 +201,34 @@ def load(
             partition_col="run_date",
         )
         try:
-            stats = conserved()
+            rows, new_wm = conserved()
+            commit = dict(
+                operation="MERGE", watermark=new_wm,
+                metrics={"numTargetRowsInserted": res.inserted,
+                         "numTargetRowsUpdated": res.updated},
+            )
             if res.scoped_df is not None:
                 # rewrite ONLY the run_date partitions the batch touched
                 # (Delta-style pruning; untouched partitions' files stay)
                 catalog.overwrite_partitions(
-                    "silver", table, res.scoped_df, res.touched_partitions
+                    "silver", table, res.scoped_df, res.touched_partitions, **commit
                 )
             else:  # null run_date in the touched set — full rewrite
-                catalog.overwrite("silver", table, res.df, partition_by=["run_date"])
+                catalog.overwrite("silver", table, res.df, partition_by=["run_date"], **commit)
         finally:
             res.cleanup()  # release merge branches even on write failure
         inserted, updated = res.inserted, res.updated
-        catalog.log_operation(
-            "silver", table, "MERGE",
-            numTargetRowsInserted=inserted, numTargetRowsUpdated=updated,
-        )
     else:
         # one scan-only job (a noop sink, no shuffle) carries both observations
         keyed.write.format("noop").mode("overwrite").save()
-        stats = conserved()
+        rows, new_wm = conserved()
         if not exists:
-            inserted = catalog.overwrite("silver", table, keyed, partition_by=["run_date"])
-            catalog.log_operation("silver", table, "CREATE", numTargetRowsInserted=inserted)
+            # an empty first batch of a watermarked table creates nothing,
+            # so the next batch is a first load too
+            inserted = 0 if wm_col and new_wm is None else catalog.overwrite(
+                "silver", table, keyed, partition_by=["run_date"],
+                operation="CREATE", watermark=new_wm,
+            )
         else:
             src = keyed
             if spec.strategy == WATERMARK_APPEND:
@@ -223,13 +236,7 @@ def load(
                 # reference's documented semantics (silver_google_scholar.py:162)
                 src = src.filter(F.col(wm_col) > F.lit(watermark))
             res = inc.dedup_insert(catalog.read("silver", table), src, key=spec.key)
-            inserted = catalog.append("silver", table, res.df)
-            catalog.log_operation("silver", table, "INSERT", numTargetRowsInserted=inserted)
-
-    if wm_col and stats["max"] is not None:
-        new_wm = str(stats["max"])
-        if spec.strategy == WATERMARK_APPEND and watermark is not None:
-            # whole-target maximum (silver_google_scholar.py:215)
-            new_wm = max(new_wm, watermark)
-        inc.write_watermark(catalog, table, new_wm)
-    return {"inserted": inserted, "updated": updated, "rows": stats["rows"]}
+            inserted = catalog.append(
+                "silver", table, res.df, operation="INSERT", watermark=new_wm
+            )
+    return {"inserted": inserted, "updated": updated, "rows": rows}

@@ -2,7 +2,8 @@
 
 Incremental appends land one file per batch; compaction rewrites the
 fragmented partitions into one file each without touching clean ones,
-and records a COMPACT history entry (Delta OPTIMIZE parity).
+and commits a COMPACT log entry (Delta OPTIMIZE parity). File counts
+are read from the newest log entry, the files a read scans.
 """
 
 from __future__ import annotations
@@ -17,8 +18,9 @@ D1, D2 = datetime.date(2023, 4, 1), datetime.date(2023, 4, 2)
 
 
 def _files(catalog, layer, name, sub=""):
-    base = catalog.path(layer, name) / sub if sub else catalog.path(layer, name)
-    return sorted(str(p) for p in base.glob("*.parquet"))
+    """The live files the newest log entry names, under partition ``sub``."""
+    files = catalog.history(layer, name)[0]["files"]
+    return sorted(f for f in files if not sub or f.startswith(sub + "/"))
 
 
 def test_partitioned_compaction_rewrites_only_fragmented(spark, tmp_path):
@@ -42,10 +44,11 @@ def test_partitioned_compaction_rewrites_only_fragmented(spark, tmp_path):
     # clean partition untouched, data identical
     assert _files(catalog, "silver", "t", "run_date=2023-04-01") == clean_before
     assert sorted(map(tuple, catalog.read("silver", "t").collect())) == data_before
-    # history records the operation
+    # the log records the operation
     top = catalog.history("silver", "t")[0]
     assert top["operation"] == "COMPACT"
-    assert top["operationMetrics"] == {"filesBefore": frag, "filesAfter": 1}
+    m = top["operationMetrics"]
+    assert (m["numRemovedFiles"], m["numAddedFiles"]) == (frag, 1)
 
 
 def test_unpartitioned_compaction_to_single_file(spark, tmp_path):
@@ -83,6 +86,34 @@ def test_vacuum_removes_only_stale_tmp_dirs(spark, tmp_path):
     assert catalog.read("silver", "t").count() == 1
 
 
+def test_vacuum_removes_stale_files_no_entry_names(spark, tmp_path):
+    """A file a failed write moved into the table before its commit is
+    named by no entry: vacuum removes it once past the age guard, and
+    never a file an entry names."""
+    import os
+    import shutil
+    import time
+
+    catalog = Catalog(spark, str(tmp_path / "wh"), retain_versions=1)
+    mk = lambda rows: spark.createDataFrame(rows, ["id", "run_date"])
+    catalog.overwrite("silver", "t", mk([("a", D1)]), partition_by=["run_date"])
+    catalog.overwrite("silver", "t", mk([("b", D2)]), partition_by=["run_date"])
+    table = catalog.path("silver", "t")
+    (live,) = _files(catalog, "silver", "t")
+    stale, fresh = table / "run_date=2023-04-02/stale.parquet", table / "fresh.parquet"
+    shutil.copy(table / live, stale)
+    shutil.copy(table / live, fresh)
+    old = time.time() - 48 * 3600
+    for f in (table / live, stale):
+        os.utime(f, (old, old))
+
+    assert catalog.vacuum("silver", max_age_seconds=24 * 3600) == [str(stale)]
+    assert fresh.exists() and (table / live).exists()
+    # version 0's file is still named by the retained entry
+    assert [r["id"] for r in catalog.read_version("silver", "t", 0).collect()] == ["a"]
+    assert [r["id"] for r in catalog.read("silver", "t").collect()] == ["b"]
+
+
 def test_runner_maintenance_stage(spark, tmp_path):
     """--maintenance compacts the day's append fragmentation and reports
     reclaimed files; the pipeline result is value-identical."""
@@ -99,14 +130,10 @@ def test_runner_maintenance_stage(spark, tmp_path):
     )
     res = run_pipeline(spark, catalog, landing, "20230402", maintenance=True)
     m = res["maintenance"].metrics
-    assert m["files_reclaimed"] >= 0 and "tmp_dirs_vacuumed" in m
+    assert m["files_reclaimed"] >= 0 and "paths_vacuumed" in m
     # day-2 dedup-append fragmented nytarchive; maintenance compacted it
-    nyt_dirs = [
-        p for p in catalog.path("silver", "nytarchive").iterdir()
-        if p.name.startswith("run_date=")
-    ]
-    for d in nyt_dirs:
-        assert sum(1 for _ in d.glob("*.parquet")) == 1, d
+    nyt_parts = [f.split("/")[0] for f in _files(catalog, "silver", "nytarchive")]
+    assert nyt_parts and len(nyt_parts) == len(set(nyt_parts)), nyt_parts
     after = sorted(
         map(tuple, catalog.read("silver", "nytarchive").drop("load_ts").collect())
     )
@@ -154,7 +181,7 @@ def test_compact_zorder_clusters_files(spark, tmp_path):
     ).first()
     assert spans.avg_span < full.fs * 0.6  # files cluster the column
     assert back.count() == li.count()
-    assert cat.history("silver", "li_z")[-1]["operation"] == "COMPACT"
+    assert cat.history("silver", "li_z")[0]["operation"] == "COMPACT"
 
 
 def test_compact_zorder_rejects_partitioned(spark, tmp_path):

@@ -113,10 +113,9 @@ def test_concurrent_days_equal_the_stages_run_one_by_one(
         "silver_scholar", LOADED, 4, {"inserted": 0, "updated": 0}
     )
     assert got["silver_nyt"].metrics["inserted"] == 0  # day 2's articles again
-    tables = _tables(ran)
-    assert ("silver", inc.watermark_name("arxiv")) in tables
-    assert ("silver", inc.watermark_name("googlescholar")) in tables
-    assert ("gold", "scored_articles") in tables
+    for t in ("arxiv", "googlescholar"):
+        assert inc.resolve_watermark(ran, t) == inc.resolve_watermark(ref, t) is not None, t
+    assert ("gold", "scored_articles") in _tables(ran)
 
 
 def test_a_failing_chain_raises_after_the_others_finish(spark, tmp_path, monkeypatch):
@@ -126,6 +125,7 @@ def test_a_failing_chain_raises_after_the_others_finish(spark, tmp_path, monkeyp
     catalog = Catalog(spark, str(tmp_path / "wh"))
     run_pipeline(spark, catalog, landing, RUN1)
     before = _tables(catalog)
+    wm_before = inc.resolve_watermark(catalog, "arxiv")
 
     # arXiv's projection drops a row of day 2's batch: its silver load
     # raises ValidationError before writing
@@ -146,8 +146,8 @@ def test_a_failing_chain_raises_after_the_others_finish(spark, tmp_path, monkeyp
 
     after = _tables(catalog)
     assert gold_calls == []
-    for key in (("silver", "arxiv"), ("silver", inc.watermark_name("arxiv"))):
-        assert after[key] == before[key], key
+    assert after[("silver", "arxiv")] == before[("silver", "arxiv")]
+    assert inc.resolve_watermark(catalog, "arxiv") == wm_before
     for layer, t in before:
         if layer == "gold":
             assert after[(layer, t)] == before[(layer, t)], t
@@ -192,9 +192,9 @@ def test_nyt_bronze_reads_case_sensitively_without_touching_the_shared_conf(
     seen = []
     overwrite = Catalog.overwrite
 
-    def spy(self, layer, name, df, partition_by=None):
+    def spy(self, layer, name, df, *args, **kwargs):
         seen.append((name, spark.conf.get(CASE)))
-        return overwrite(self, layer, name, df, partition_by)
+        return overwrite(self, layer, name, df, *args, **kwargs)
 
     monkeypatch.setattr(Catalog, "overwrite", spy)
     catalog = Catalog(spark, str(tmp_path / "wh"))

@@ -3,16 +3,16 @@ gold scoring and the day's Spark job budget.
 
 - a daily run launches exactly its Spark job budget (the jobs of its
   concurrent chains carry the caller's job group), and reading a table
-  (its schema is recorded in the table directory) launches no job; nor
-  does reading a watermark's rows in the driver, nor a merge that is
-  not asked for a partition plan;
-- a failure while the schema is recorded leaves the previous table
+  (its schema is recorded in its log entry) launches no job, whether
+  the entry names a few files, more than Spark's listing-job threshold,
+  or none; nor does a merge that is not asked for a partition plan;
+- a failure while the log entry is written leaves the previous table
   readable, with its old rows and schema;
 - the checks are kept: a projection that drops a row raises before
   anything is written, and an append whose schema differs from the
   recorded one raises;
-- re-running a day whose Scholar watermark write crashed gives the
-  same silver tables as a clean run;
+- re-running a day whose Scholar silver commit crashed gives the same
+  silver tables and watermarks as a clean run;
 - the gold text cleaning equals the reference regex chain, the stopword
   removal (array_except) equals the per-token filter it replaced, and
   gold scoring keeps exactly the rows a Filter keeps, dropping an
@@ -22,13 +22,14 @@ gold scoring and the day's Spark job budget.
 from __future__ import annotations
 
 import dataclasses
-import json
 import uuid
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from bc_proj3_spark import catalog as catalog_module
 from bc_proj3_spark.catalog import Catalog
 from bc_proj3_spark.io import sources
 from bc_proj3_spark.operators import incremental as inc
@@ -39,10 +40,11 @@ from bc_proj3_spark.pipeline import silver as sv
 RUN1, RUN2 = "20230401", "20230402"
 
 #: Spark jobs of one incremental day on the fetch_all fixtures: bronze 6
-#: (a JSON scan and a write per source), silver 13 (arXiv 6, NYT 3,
-#: Scholar 4), gold 4 (one write per table). The count repeats exactly;
-#: fewer means jobs escaped the caller's job group.
-DAY_JOB_BUDGET = 23
+#: (a JSON scan and a write per source), silver 11 (arXiv 5, NYT 3,
+#: Scholar 3; the watermarks commit in the silver writes' log entries),
+#: gold 4 (one write per table). The count repeats exactly; fewer means
+#: jobs escaped the caller's job group.
+DAY_JOB_BUDGET = 21
 
 SILVER = ("arxiv", "nytarchive", "googlescholar")
 
@@ -87,15 +89,34 @@ def test_read_with_recorded_schema_launches_no_job(spark, tmp_path):
         [("a", 1, "2023-04-01"), ("b", 2, "2023-04-02")], ["id", "n", "day"]
     ).withColumn("day", F.to_date("day"))
     catalog.overwrite("silver", "t", df, partition_by=["day"])
-    meta_path = catalog.path("silver", "t") / "_catalog_meta.json"
-    assert "schema" in json.loads(meta_path.read_text())
-    assert not (catalog.path("silver", "t").parent / "_meta").exists()
+    (entry,) = catalog.history("silver", "t")
+    assert StructType.fromJson(entry["schema"]).simpleString() == (
+        "struct<id:string,n:bigint,day:date>"
+    )
+    assert [p.name for p in catalog.path("silver", "t").parent.iterdir()] == ["t"]
 
     back, jobs = _jobs(spark, lambda: catalog.read("silver", "t"))
     assert jobs == 0
     assert back.schema.simpleString() == "struct<id:string,n:bigint,day:date>"
     want = sorted(map(tuple, df.collect()))
     assert sorted(map(tuple, back.collect())) == want
+
+    # 40 partitions of one file each: past the 32 paths above which
+    # Spark lists a file list with a job
+    wide = spark.range(80).selectExpr("id", "id % 40 AS p")
+    catalog.overwrite("silver", "wide", wide.repartition(40, "p"), partition_by=["p"])
+    assert len(catalog.history("silver", "wide")[0]["files"]) == 40
+    back, jobs = _jobs(spark, lambda: catalog.read("silver", "wide"))
+    assert jobs == 0
+    assert sorted(r["id"] for r in back.collect()) == list(range(80))
+
+    # a commit of no rows is a table, read as an empty frame without a job
+    catalog.overwrite("silver", "empty", df.filter("n < 0"), partition_by=["day"])
+    assert catalog.exists("silver", "empty")
+    back, jobs = _jobs(spark, lambda: catalog.read("silver", "empty"))
+    assert jobs == 0
+    assert back.schema.simpleString() == "struct<id:string,n:bigint,day:date>"
+    assert back.collect() == []
 
 
 def test_failure_while_recording_schema_keeps_previous_table(spark, tmp_path, monkeypatch):
@@ -137,16 +158,6 @@ def test_merge_without_partition_plan_launches_no_job(spark):
     assert (res.inserted, res.updated, res.touched_partitions) == (-1, -1, None)
     assert sorted(map(tuple, res.df.collect())) == [("a", 1), ("b", 2), ("c", 1)]
     res.cleanup()
-
-
-def test_read_rows_launches_no_job_and_matches_read(spark, tmp_path):
-    catalog = Catalog(spark, str(tmp_path / "wh"))
-    inc.write_watermark(catalog, "arxiv", "2023-04-01")
-    name = inc.watermark_name("arxiv")
-    rows, jobs = _jobs(spark, lambda: catalog.read_rows("silver", name))
-    assert jobs == 0
-    assert rows == [r.asDict() for r in catalog.read("silver", name).collect()]
-    assert rows == [{"watermark_date": "2023-04-01"}]
 
 
 def test_append_with_a_different_schema_raises(spark, tmp_path):
@@ -201,21 +212,24 @@ def test_scholar_rerun_after_watermark_crash_equals_clean_run(
 
     catalog = Catalog(spark, str(tmp_path / "crashed"))
     run_pipeline(spark, catalog, landing, RUN1)
-    overwrite = catalog.overwrite
+    publish = catalog_module._publish
 
-    def crash_on_watermark(layer, name, df, partition_by=None):
-        if name == inc.watermark_name("googlescholar"):
-            raise RuntimeError("injected crash inside write_watermark")
-        return overwrite(layer, name, df, partition_by)
+    def crash_on_scholar_commit(entry, log_file):
+        # the Scholar silver commit carries the rows and the watermark
+        if log_file.parts[-4:-2] == ("silver", "googlescholar"):
+            raise RuntimeError("injected crash at the Scholar silver commit")
+        publish(entry, log_file)
 
-    monkeypatch.setattr(catalog, "overwrite", crash_on_watermark)
+    monkeypatch.setattr(catalog_module, "_publish", crash_on_scholar_commit)
     with pytest.raises(RuntimeError, match="injected crash"):
         run_pipeline(spark, catalog, landing, RUN2)
     monkeypatch.undo()
     run_pipeline(spark, catalog, landing, RUN2)
 
-    for t in SILVER + tuple(inc.watermark_name(t) for t in ("arxiv", "googlescholar")):
+    for t in SILVER:
         assert _rows(catalog.read("silver", t)) == _rows(clean.read("silver", t)), t
+    for t in ("arxiv", "googlescholar"):
+        assert inc.resolve_watermark(catalog, t) == inc.resolve_watermark(clean, t), t
     ggl = catalog.read("silver", "googlescholar")
     assert ggl.select("ggl_sk").distinct().count() == ggl.count()
 

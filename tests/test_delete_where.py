@@ -2,10 +2,10 @@
 
 Pins the contract: rows matching the predicate disappear, rows sharing
 a partition with them are preserved, partitions with NO matching rows
-are never rewritten (same paths, same mtimes), a fully-matched
-partition's directory is removed, a DELETE history entry records the
-predicate and counts, and the pre-delete state remains readable via
-time travel.
+are never rewritten (the newest log entry names the same files, with
+the same mtimes), a fully-matched partition leaves the file list and
+its directory is removed, a DELETE log entry records the predicate and
+counts, and the pre-delete state remains readable via time travel.
 """
 
 from __future__ import annotations
@@ -21,11 +21,13 @@ D1, D2, D3 = (datetime.date(2023, 4, d) for d in (1, 2, 3))
 
 
 def _file_state(catalog: Catalog, layer: str, name: str, part: str) -> dict:
-    base = catalog.path(layer, name) / part
+    """{file: mtime_ns} for the live files of one partition, as the
+    newest log entry names them."""
+    table = catalog.path(layer, name)
     return {
-        str(p.relative_to(base)): p.stat().st_mtime_ns
-        for p in base.rglob("*")
-        if p.is_file()
+        f: (table / f).stat().st_mtime_ns
+        for f in catalog.history(layer, name)[0]["files"]
+        if f.startswith(part + "/")
     }
 
 
@@ -67,6 +69,7 @@ def test_delete_drops_fully_matched_partition(spark, tmp_path):
     catalog = _mk(spark, tmp_path)
     deleted = catalog.delete_where("silver", "t", F.col("run_date") == F.lit(D2))
     assert deleted == 4
+    assert _file_state(catalog, "silver", "t", "run_date=2023-04-02") == {}
     assert not (catalog.path("silver", "t") / "run_date=2023-04-02").exists()
     assert catalog.read("silver", "t").count() == 8
 
@@ -79,7 +82,7 @@ def test_delete_noop_rewrites_nothing(spark, tmp_path):
     }
     assert catalog.delete_where("silver", "t", F.col("user") == "nobody") == 0
     for p, st in states.items():
-        assert _file_state(catalog, "silver", "t", p) == st
+        assert st and _file_state(catalog, "silver", "t", p) == st
 
 
 def test_delete_time_travel_keeps_predelete_state(spark, tmp_path):

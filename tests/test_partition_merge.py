@@ -9,8 +9,9 @@ tests pin the two halves of that contract:
 
 - correctness: the scoped rewrite produces the same table as the full
   merge rewrite;
-- pruning: files under untouched partitions are NOT rewritten (same
-  paths, same mtimes) — the property that makes the daily upsert scale.
+- pruning: files under untouched partitions are NOT rewritten (the
+  newest log entry names the same files, with the same mtimes) — the
+  property that makes the daily upsert scale.
 """
 
 from __future__ import annotations
@@ -27,12 +28,13 @@ D1, D2, D3, D4 = (datetime.date(2023, 4, d) for d in (1, 2, 3, 4))
 
 
 def _file_state(catalog: Catalog, layer: str, name: str, part: str) -> dict:
-    """{relative_path: mtime_ns} for one partition directory."""
-    base = catalog.path(layer, name) / part
+    """{file: mtime_ns} for the live files of one partition, as the
+    newest log entry names them."""
+    table = catalog.path(layer, name)
     return {
-        str(p.relative_to(base)): p.stat().st_mtime_ns
-        for p in base.rglob("*")
-        if p.is_file()
+        f: (table / f).stat().st_mtime_ns
+        for f in catalog.history(layer, name)[0]["files"]
+        if f.startswith(part + "/")
     }
 
 
@@ -109,6 +111,7 @@ def test_moved_row_empties_and_deletes_old_partition(spark, tmp_path):
     assert res.touched_partitions == [D1, D3]
     catalog.overwrite_partitions("silver", "t", res.scoped_df, res.touched_partitions)
     res.cleanup()
+    assert _file_state(catalog, "silver", "t", "run_date=2023-04-01") == {}
     assert not (catalog.path("silver", "t") / "run_date=2023-04-01").exists()
     got = sorted(map(tuple, catalog.read("silver", "t").collect()))
     assert got == [("a", 2, D3), ("b", 1, D2)]
@@ -137,6 +140,7 @@ def test_noop_merge_touches_nothing(spark, tmp_path):
     res.cleanup()
     for p, st in before.items():
         assert _file_state(catalog, "silver", "t", p) == st, p
+    assert len(catalog.history("silver", "t")) == 1  # nothing committed
 
 
 def test_null_partition_value_falls_back_to_full_rewrite(spark, tmp_path):
@@ -187,20 +191,12 @@ def test_pipeline_rerun_rewrites_no_silver_files(spark, tmp_path):
     run_pipeline(spark, catalog, landing, "20230401")
     run_pipeline(spark, catalog, landing, "20230402")
 
-    base = catalog.path("silver", "arxiv")
-    before = {
-        str(p.relative_to(base)): p.stat().st_mtime_ns
-        for p in base.rglob("*.parquet")
-    }
+    before = _file_state(catalog, "silver", "arxiv", "run_date=")
     snap = sorted(
         map(tuple, catalog.read("silver", "arxiv").drop("load_ts").collect())
     )
     run_pipeline(spark, catalog, landing, "20230402")  # idempotent re-run
-    after = {
-        str(p.relative_to(base)): p.stat().st_mtime_ns
-        for p in base.rglob("*.parquet")
-    }
-    assert after == before
+    assert _file_state(catalog, "silver", "arxiv", "run_date=") == before
     assert sorted(
         map(tuple, catalog.read("silver", "arxiv").drop("load_ts").collect())
     ) == snap

@@ -3,8 +3,8 @@
 Pins the reference's semantic contracts (SURVEY.md §3.3, §7.4):
 schemas of the derived layers (FIXTURES.md §4), idempotency under
 re-run, incremental merge/dedup behavior across run dates, watermark
-advancement, fresh-load reset, precondition guards, and the no-files
-skip path.
+advancement, fresh-load reset, precondition guards, the no-files skip
+path and a day whose arXiv batch is empty.
 """
 
 from __future__ import annotations
@@ -117,10 +117,10 @@ def test_fresh_load_resets(spark, env):
 
 
 def test_precondition_guard(spark, env):
-    landing, catalog = env
-    run_pipeline(spark, catalog, landing, RUN1)
-    catalog.drop("silver", "watermark_arxiv")  # table without watermark
-    with pytest.raises(PreconditionError):
+    _landing, catalog = env
+    # a table created by a plain overwrite has no watermark in its log
+    catalog.overwrite("silver", "arxiv", spark.createDataFrame([("2303.01", 1)], ["id", "version"]))
+    with pytest.raises(PreconditionError, match="no watermark"):
         load(spark, catalog, ARXIV)
 
 
@@ -131,6 +131,23 @@ def test_no_files_skips_bronze_but_silver_reruns(spark, env):
     assert results["bronze_arxiv"].status == "SKIPPED"
     assert results["silver_arxiv"].status == "LOADED"  # old bronze, idempotent
     assert catalog.read("silver", "arxiv").count() == 6  # unchanged
+
+
+def test_empty_arxiv_batch_leaves_silver_and_its_watermark(spark, env):
+    """An incremental day whose arXiv landing batch has no entries: every
+    stage loads or skips, the empty bronze batch is a table that reads
+    as no rows, and silver.arxiv keeps its rows and its watermark."""
+    landing, catalog = env
+    run_pipeline(spark, catalog, landing, RUN1)
+    rows, wm = _nondet_free(catalog.read("silver", "arxiv")), resolve_watermark(catalog, "arxiv")
+    sources.fetch_arxiv("20230403", landing, epoch=3000, transport=lambda _d: {"feed": {"entry": []}})
+    results = run_pipeline(spark, catalog, landing, "20230403")
+    assert {r.status for r in results.values()} <= {"LOADED", "SKIPPED"}, results
+    assert results["bronze_arxiv"].status == "LOADED"
+    assert catalog.read("bronze", "arxiv").count() == 0
+    assert results["silver_arxiv"].metrics == {"inserted": 0, "updated": 0}
+    assert _nondet_free(catalog.read("silver", "arxiv")) == rows
+    assert resolve_watermark(catalog, "arxiv") == wm
 
 
 def test_landing_latest_pick():

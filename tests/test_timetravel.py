@@ -1,14 +1,17 @@
-"""Time travel (Catalog.read_version) via hardlink snapshots.
+"""Time travel (Catalog.read_version) via the commit log.
 
 Delta parity: the reference reads DESCRIBE HISTORY after every merge
-and managed Delta gives it VERSION AS OF for free; this catalog retains
-hardlink snapshots of the pre-rewrite state (zero data copy) when
-``retain_versions`` > 0. Default stays 0 — the original swap-and-delete.
+and managed Delta gives it VERSION AS OF for free; this catalog keeps
+the files of the ``retain_versions`` log entries before the newest, so
+an earlier entry reads the very files that were live then (zero data
+copy). Default stays 0: a write deletes the files it replaces.
 """
 
 from __future__ import annotations
 
 import datetime
+import os
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,16 +48,17 @@ def test_retention_prunes_oldest(spark, tmp_path):
         catalog.read_version("silver", "t", 0)
 
 
-def test_snapshots_are_hardlinks_not_copies(spark, tmp_path):
+def test_retained_version_reads_the_old_live_file(spark, tmp_path):
     catalog = Catalog(spark, str(tmp_path / "wh"), retain_versions=1)
     catalog.overwrite("silver", "t", _mk(spark, "a").coalesce(1))
-    live = next(catalog.path("silver", "t").rglob("*.parquet"))
-    ino_before = live.stat().st_ino
+    (live,) = catalog.read("silver", "t").inputFiles()
+    ino_before = os.stat(urlparse(live).path).st_ino
     catalog.overwrite("silver", "t", _mk(spark, "b"))
-    snap = next((catalog._versions_dir("silver", "t") / "v0").rglob("*.parquet"))
-    # the snapshot file IS the old live file (same inode, no data copy),
-    # and deleting the live tree did not disturb it
-    assert snap.stat().st_ino == ino_before
+    # the file version 0 names IS the old live file (same inode, no data
+    # copy), and the overwrite that replaced it did not disturb it
+    (old,) = catalog.read_version("silver", "t", 0).inputFiles()
+    assert os.stat(urlparse(old).path).st_ino == ino_before
+    assert old not in catalog.read("silver", "t").inputFiles()
     assert [r["id"] for r in catalog.read_version("silver", "t", 0).collect()] == ["a"]
 
 
@@ -100,9 +104,10 @@ def test_drop_removes_versions_and_listing_hides_internal_dirs(spark, tmp_path):
     catalog = Catalog(spark, str(tmp_path / "wh"), retain_versions=2)
     catalog.overwrite("silver", "t", _mk(spark, "a"))
     catalog.overwrite("silver", "t", _mk(spark, "b"))
-    # _versions holds parquet files but must never appear as a table
+    # the retained version's files live in the table's own directory
     assert catalog.list_tables("silver") == ["t"]
     catalog.drop("silver", "t")
     assert catalog.versions("silver", "t") == []
-    assert not catalog._versions_dir("silver", "t").exists()
+    assert catalog.history("silver", "t") == []
+    assert not catalog.path("silver", "t").exists()
     assert catalog.list_tables("silver") == []

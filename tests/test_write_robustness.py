@@ -6,9 +6,9 @@ Two properties a 100 TB pipeline depends on every day:
   (``maxRecordsPerFile``) so downstream loaders stream fixed-size
   shards — the write-side companion to sp4's sequence packing;
 - a FAILED overwrite must leave the previous table state untouched:
-  the catalog stages into a tmp dir and swaps only on success, so a
-  job that dies mid-write (here: a deliberately-failing expression)
-  never corrupts the live table.
+  the catalog stages into a tmp dir and commits a log entry only on
+  success, so a job that dies mid-write (here: a deliberately-failing
+  expression) never corrupts the live table.
 """
 
 from __future__ import annotations
@@ -61,8 +61,12 @@ def test_failed_overwrite_preserves_previous_state(spark, tmp_path):
     back = cat.read("silver", "t")
     assert back.count() == 10
     assert {r.v for r in back.collect()} == {"v1"}  # untouched
+    # the log still ends at the first write, and names files that exist
+    (entry,) = cat.history("silver", "t")
+    table = cat.path("silver", "t")
+    assert entry["files"] and all((table / f).exists() for f in entry["files"])
 
-    # the aborted staging dir is vacuumable garbage, not table state
+    # anything the aborted write left is vacuumable garbage, not table state
     leftovers = cat.vacuum("silver", max_age_seconds=0.0)
-    assert all("tmp-" in p for p in leftovers)
+    assert all(str(table / f) not in leftovers for f in entry["files"])
     assert cat.read("silver", "t").count() == 10
