@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bc_proj3_spark.catalog import Catalog
+from bc_proj3_spark.pipeline.silver import ARXIV_ENTRY_FIELDS
 from bc_proj3_spark.session import apply_runtime_conf
 
 
@@ -47,9 +48,7 @@ def bronze_arxiv(
     if isinstance(entries.schema["results"].dataType, StructType):
         flat = entries.select("results.*")
     else:
-        flat = entries.selectExpr(
-            *(f"CAST(NULL AS STRING) AS {c}" for c in ("id", "updated", "title", "summary"))
-        )
+        flat = entries.selectExpr(*(f"CAST(NULL AS STRING) AS {c}" for c in ARXIV_ENTRY_FIELDS))
     return catalog.overwrite("bronze", "arxiv", _audit(flat, file_path, run_date))
 
 

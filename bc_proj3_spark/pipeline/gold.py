@@ -197,9 +197,8 @@ def gold_scoring(spark: SparkSession, catalog: Catalog) -> int:
     """scored_articles (gold_article_scoring.py:149-175): the NLP-lite
     scoring chain over the combined view, keeping article_score > 0."""
     df = combined_pre_nlp(spark, catalog)
-    # one projection, analysed once: each column after the first reads
-    # the ones before it by their alias (lateral column aliases), where
-    # a withColumn per column would be analysed eagerly one by one
+    # one projection: each column after the first reads the ones before
+    # it by their alias (lateral column aliases)
     scored = df.select(
         "*",
         unique_lemmas(F.col("words")).alias("vector_unique"),

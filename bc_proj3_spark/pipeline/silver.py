@@ -91,6 +91,10 @@ def _keyed(proj: DataFrame, key: str, *parts: str) -> DataFrame:
     return proj.selectExpr(f"sha2(concat_ws('||', {', '.join(parts)}), 256) AS {key}", "*")
 
 
+#: the bronze arXiv fields _arxiv reads; an empty feed lands as these
+ARXIV_ENTRY_FIELDS = ("id", "updated", "title", "summary")
+
+
 def _arxiv(bronze: DataFrame) -> DataFrame:
     tail = "split(split(id, '/')[4], 'v')"
     proj = bronze.selectExpr(

@@ -35,6 +35,7 @@ def test_partitioned_compaction_rewrites_only_fragmented(spark, tmp_path):
     frag = len(_files(catalog, "silver", "t", "run_date=2023-04-02"))
     assert frag >= 4
     clean_before = _files(catalog, "silver", "t", "run_date=2023-04-01")
+    assert clean_before
     data_before = sorted(map(tuple, catalog.read("silver", "t").collect()))
 
     done = catalog.compact("silver", "t")
@@ -145,6 +146,7 @@ def test_compaction_noop_below_threshold(spark, tmp_path):
     df = spark.createDataFrame([("a", D1)], ["id", "run_date"]).coalesce(1)
     catalog.overwrite("silver", "t", df, partition_by=["run_date"])
     files_before = _files(catalog, "silver", "t", "run_date=2023-04-01")
+    assert files_before
     assert catalog.compact("silver", "t") == {}
     assert _files(catalog, "silver", "t", "run_date=2023-04-01") == files_before
     assert all(h["operation"] != "COMPACT" for h in catalog.history("silver", "t"))

@@ -46,6 +46,7 @@ def _mk(spark, tmp_path, retain_versions=0) -> Catalog:
 def test_delete_prunes_untouched_partitions(spark, tmp_path):
     catalog = _mk(spark, tmp_path)
     before_d3 = _file_state(catalog, "silver", "t", "run_date=2023-04-03")
+    assert before_d3
     # u1 exists on every day, but restrict the delete to days 1 and 2:
     # day 3 must not be rewritten.
     deleted = catalog.delete_where(
